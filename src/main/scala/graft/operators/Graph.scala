@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Checkpoints.SnapOps
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Queries.Q
@@ -58,12 +58,15 @@ object Graph {
   //
   // Shape at scale: the edge list and out-degrees build once (cached,
   // eagerly materialized — the a17 lesson: a LAZY persist under AQE's
-  // parallel stages races and recomputes); each round is ONE shuffle
-  // (the recv hash-agg; the dangling sum is a broadcast one-row cross
-  // join) and the rank frame is localCheckpoint-truncated so the
-  // two-consumer round (contrib join + dangling filter) cannot double
-  // the inlined plan per iteration — 2^8 copies otherwise (the d8/a17
-  // listener-audit trap, memory + VERDICT r13).
+  // parallel stages races and recomputes). Each round is ONE union +
+  // groupBy shuffle and ONE checkpoint job: every node's self row
+  // (n, outdeg, previous pr) rides the union beside the edge
+  // contributions, so no join back to the node frame; the dangling sum
+  // for the next round is a Dataset.observe metric of that same job,
+  // fed back as a one-row broadcast relation. The rank frame is
+  // checkpoint-truncated so the two-consumer round (contrib join + self
+  // rows) cannot double the inlined plan per iteration — 2^8 copies
+  // otherwise (the d8/a17 listener-audit trap, memory + VERDICT r13).
   // ---------------------------------------------------------------------
   /** (doc_id, n, outdeg) — the synthetic node frame both fixpoints
     * share (n rides along for the teleport arithmetic). */
@@ -88,11 +91,16 @@ object Graph {
           when(col("k") === 0L, 7L).when(col("k") === 1L, 13L)
             .otherwise(29L) + col("k") + lit(1L)) % col("n")).as("dst"))
 
-  /** The r0..r[[PR_ITERS]] rank frames, each localCheckpoint-pinned
-    * (so g1's final projection and g1b's per-round deltas both read
-    * materialized rounds, never re-run lineage). Column shape per
-    * round: (doc_id, n, outdeg, pr). */
-  private def prRounds(s: SparkSession, d: String): Seq[DataFrame] = {
+  /** The rank frames r0..r`iters`, each (doc_id, n, outdeg, pr) and
+    * checkpoint-pinned, plus `steps(i - 1)` = round i's L1 step
+    * Σ|pr_i − pr_{i−1}|, read off round i's own checkpoint job. */
+  private[graft] final case class PrRounds(
+      frames: Seq[DataFrame], steps: Seq[Long])
+
+  /** The r0..r[[PR_ITERS]] rounds of g1's graph (g1's final projection
+    * and g1b's per-round steps both read materialized rounds, never
+    * re-run lineage). */
+  private def prRounds(s: SparkSession, d: String): PrRounds = {
     val nodes = nodesOf(s, d)
     val edges = edgesOf(nodes).persist()
     edges.count() // eager: 8 consuming rounds must not race the cache
@@ -100,7 +108,7 @@ object Graph {
       nodes.select(col("doc_id"), col("n"), col("outdeg"),
         expr(s"$PR_SCALE div n").as("pr")),
       edges, PR_ITERS)
-    // rounds are materialized (localCheckpoint is eager), so the edge
+    // rounds are materialized (every snap is eager), so the edge
     // cache has served its 8 consumers and can release now
     edges.unpersist()
     rounds
@@ -110,33 +118,67 @@ object Graph {
     * outdeg, pr) over ANY (src, outdeg, dst) edge list — split from
     * [[prRounds]] so g7 can run the same integer-exact rounds cold
     * (uniform init) and warm (a prior fixpoint's ranks) on a delta'd
-    * graph. Caller persists+materializes the edge frame; every round
-    * localCheckpoints (the two-consumer lineage discipline). */
+    * graph. Caller persists+materializes the edge frame.
+    *
+    * Each round is one union + groupBy shuffle and one eager snap:
+    * every node emits a self row (n, outdeg, its previous pr as
+    * `prev`, contribution 0) beside the edge contributions, so the
+    * grouped row carries everything the next rank needs without a join
+    * back to the node frame. The dangling mass Σ_{outdeg=0} pr and the
+    * L1 step are observed on the snap's own job and handed to the
+    * next round as a one-row broadcast RELATION, not a literal: a
+    * per-round literal changes the generated code every round, so
+    * every round would miss the whole-stage codegen cache and pay a
+    * compile on the driver and in every task. */
   private def prFixpointRounds(
-      init: DataFrame, edges: DataFrame, iters: Int): Seq[DataFrame] = {
+      init: DataFrame, edges: DataFrame, iters: Int): PrRounds = {
+    val s = init.sparkSession
     val teleport = expr(s"15L * ($PR_SCALE div n) div 100")
-    var r = init.snap()
-    val rounds = Seq.newBuilder[DataFrame]
-    rounds += r
-    for (_ <- 1 to iters) {
-      val recv = edges
-        .join(r.select(col("doc_id").as("src"), col("pr")), "src")
-        .select(col("dst").as("doc_id"),
-          expr("pr div outdeg").as("c"))
-        .groupBy(col("doc_id")).agg(sum(col("c")).as("recv"))
-      val dang = r.filter(col("outdeg") === 0L)
-        .agg(coalesce(sum(col("pr")), lit(0L)).as("dang"))
-      r = r.select(col("doc_id"), col("n"), col("outdeg"))
-        .join(recv, Seq("doc_id"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("doc_id"), col("n"), col("outdeg"),
-          (teleport +
-            expr(s"$PR_DAMP_PCT * (coalesce(recv, 0L) + dang div n) " +
-              "div 100")).as("pr"))
+    val dangOf = coalesce(sum(when(col("outdeg") === 0L, col("pr"))),
+      lit(0L)).as("dang")
+    /** Eager snap of `df` plus the metrics observed on its job. */
+    def snapObserved(
+        df: DataFrame, metrics: Column*): (DataFrame, Map[String, Long]) = {
+      val obs = Observation()
+      val out = df.observe(obs, metrics.head, metrics.tail: _*)
+        .select(col("doc_id"), col("n"), col("outdeg"), col("pr"))
         .snap()
-      rounds += r
+      (out, obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] })
     }
-    rounds.result()
+    var (r, m) = snapObserved(init, dangOf)
+    val frames = Seq.newBuilder[DataFrame]
+    val steps = Seq.newBuilder[Long]
+    frames += r
+    for (_ <- 1 to iters) {
+      val dang = s.createDataFrame(Seq(Tuple1(m("dang")))).toDF("dang")
+      val contrib = edges
+        .join(r.select(col("doc_id").as("src"), col("pr")), "src")
+        .select(col("dst").as("doc_id"), lit(null).cast("long").as("n"),
+          lit(null).cast("long").as("outdeg"),
+          lit(null).cast("long").as("prev"),
+          expr("pr div outdeg").as("c"))
+      val grouped = r
+        .select(col("doc_id"), col("n"), col("outdeg"),
+          col("pr").as("prev"), lit(0L).as("c"))
+        .unionByName(contrib)
+        .groupBy(col("doc_id"))
+        .agg(max(col("n")).as("n"), max(col("outdeg")).as("outdeg"),
+          max(col("prev")).as("prev"), sum(col("c")).as("recv"))
+        // a contribution to an id outside the node frame has no self
+        // row (the old node-frame left join dropped it the same way)
+        .filter(col("n").isNotNull)
+      val next = grouped.crossJoin(broadcast(dang))
+        .select(col("doc_id"), col("n"), col("outdeg"), col("prev"),
+          (teleport +
+            expr(s"$PR_DAMP_PCT * (recv + dang div n) div 100")).as("pr"))
+      val (rn, mn) = snapObserved(next, dangOf,
+        sum(abs(col("pr") - col("prev"))).as("step"))
+      r = rn
+      m = mn
+      frames += r
+      steps += m("step")
+    }
+    PrRounds(frames.result(), steps.result())
   }
 
   /** The full r0..r[[PR_ITERS]] recurrence as DuckDB CTE text — the
@@ -184,7 +226,8 @@ object Graph {
   val g1Pagerank = Q(
     "g1_pagerank",
     (s, d) =>
-      prRounds(s, d).last.select(col("doc_id"), col("outdeg"), col("pr")),
+      prRounds(s, d).frames.last
+        .select(col("doc_id"), col("outdeg"), col("pr")),
     Some(s"""WITH $prDuckCtes
       SELECT doc_id, outdeg, CAST(pr AS BIGINT) AS pr
       FROM r$PR_ITERS"""))
@@ -195,40 +238,24 @@ object Graph {
   // round: the L1 rank delta Σ|pr_i − pr_{i−1}| in integer mass units
   // plus its fraction of total mass, so "how converged is 8 rounds"
   // is a driver-visible number (and the dial to raise PR_ITERS on),
-  // not a constant buried in code. Each delta is a doc_id-keyed join
-  // of two ALREADY-MATERIALIZED rounds (prRounds localCheckpoints
-  // every frame), so the 8 delta branches never re-run fixpoint
-  // lineage; per-branch cost is one join + one scalar agg — the same
-  // shape per round the fixpoint itself pays. GraphSpec asserts the
-  // deltas decrease monotonically (damping 0.85 contracts the L1
-  // error geometrically; a non-decreasing step means a broken round).
+  // not a constant buried in code. Each step is a Dataset.observe
+  // metric of its round's own checkpoint job (the round frame carries
+  // the previous rank as `prev`), so the report costs no job at all:
+  // its 8 rows are a local relation built from the observed steps.
+  // GraphSpec recomputes every step with the independent recurrence
+  // and requires equality, and asserts the deltas decrease
+  // monotonically (damping 0.85 contracts the L1 error geometrically;
+  // a non-decreasing step means a broken round).
   // ---------------------------------------------------------------------
   val g1bPagerankConverge = Q(
     "g1b_pagerank_converge",
-    (s, d) => {
-      // r21 (guide §2.4): the per-round branch form planned one join +
-      // one scalar agg PER ROUND (8 branches → ~24 sequential AQE
-      // stage-jobs over already-materialized rounds). The tall form
-      // unions the checkpointed rounds once, derives pr_prev with ONE
-      // lag window and aggregates per round in ONE pass — two
-      // exchanges total, and at scale one shuffle of (iters+1)·n thin
-      // rows instead of `iters` separate n⋈n joins. Identical rows:
-      // every (doc_id, round) appears exactly once, lag(pr) over
-      // (doc_id, round-asc) IS the previous round's rank.
-      import org.apache.spark.sql.expressions.Window
-      val rounds = prRounds(s, d)
-      val tall = rounds.zipWithIndex.map { case (r, i) =>
-        r.select(lit(i.toLong).as("round"), col("doc_id"), col("pr"))
-      }.reduce(_ unionByName _)
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("round").asc)
-      tall.withColumn("pr_prev", lag(col("pr"), 1).over(w))
-        .filter(col("round") >= 1)
-        .groupBy(col("round"))
-        .agg(sum(abs(col("pr") - col("pr_prev"))).as("l1_delta"))
+    (s, d) =>
+      s.createDataFrame(prRounds(s, d).steps.zipWithIndex.map {
+        case (step, i) => ((i + 1).toLong, step)
+      }).toDF("round", "l1_delta")
         .select(col("round"), col("l1_delta"),
           round(col("l1_delta").cast("double") /
-            lit(PR_SCALE.toDouble), 9).as("delta_frac"))
-    },
+            lit(PR_SCALE.toDouble), 9).as("delta_frac")),
     Some {
       val branches = (1 to PR_ITERS).map { i =>
         s"""SELECT CAST($i AS BIGINT) AS round,
@@ -1060,11 +1087,10 @@ object Graph {
   // (GraphSpec pins warm₀ ≪ cold₀ and warm₄ ≤ cold₄).
   //
   // Shape at scale: the warm path's cost is G7_WARM rounds instead of
-  // PR_ITERS — each round one hash-agg shuffle + a broadcast dangling
-  // sum, frames localCheckpoint-truncated (the d8/a17 lineage
-  // discipline); the report branches join ALREADY-MATERIALIZED rounds
-  // (g1b's shape). The cold run exists here only to publish the
-  // comparison; production runs warm-only.
+  // PR_ITERS — each round g1's one union + groupBy shuffle and one
+  // checkpoint job (the d8/a17 lineage discipline); the report joins
+  // ALREADY-MATERIALIZED rounds. The cold run exists here only to
+  // publish the comparison; production runs warm-only.
   // ---------------------------------------------------------------------
   private[graft] val G7_WARM = 4
 
@@ -1077,7 +1103,7 @@ object Graph {
       val base = prFixpointRounds(
         nodes.select(col("doc_id"), col("n"), col("outdeg"),
           expr(s"$PR_SCALE div n").as("pr")),
-        baseEdges, PR_ITERS)
+        baseEdges, PR_ITERS).frames
       val bump = when(col("doc_id") % 50 === 0, lit(1L)).otherwise(lit(0L))
       val mNodes = nodes.select(col("doc_id"), col("n"),
         (col("outdeg") + bump).as("outdeg"))
@@ -1103,30 +1129,29 @@ object Graph {
           .select(col("doc_id"), col("n"), col("outdeg"), col("pr")),
         mEdges, G7_WARM)
       mEdges.unpersist() // all rounds materialized
-      val fin = cold.last.select(col("doc_id"), col("pr").as("pr_fin"))
-      // r21 (guide §2.4, the g1b tall-union rewrite): the branch form
-      // planned 22 report branches × 2 joins each over materialized
-      // rounds (~140 sequential AQE stage-jobs for 7 s of task time —
-      // pure scheduler latency). Tall form: union every checkpointed
-      // round once with (phase, round) tags, ONE lag window for
-      // pr_prev, ONE doc_id join against the cold fixpoint, ONE
-      // grouped aggregation. Identical rows: lag is null exactly at
-      // round 0, so sum(abs(pr - pr_prev)) is null there — the same
-      // null l1_delta the round-0 branch emitted.
-      import org.apache.spark.sql.expressions.Window
+      val fin = cold.frames.last.select(col("doc_id"), col("pr").as("pr_fin"))
+      // Tall form: union every checkpointed round once with (phase,
+      // round) tags, ONE doc_id join against the cold fixpoint, ONE
+      // grouped aggregation (the per-round branch form planned ~140
+      // sequential AQE stage-jobs — pure scheduler latency). l1_delta
+      // is each round's observed step; round 0 has none, so the left
+      // join leaves it null, as the oracle's round-0 branch does.
       def tallOf(phase: String, rounds: Seq[DataFrame]): DataFrame =
         rounds.zipWithIndex.map { case (r, i) =>
           r.select(lit(phase).as("phase"), lit(i.toLong).as("round"),
             col("doc_id"), col("pr"))
         }.reduce(_ unionByName _)
-      val w = Window.partitionBy(col("phase"), col("doc_id"))
-        .orderBy(col("round").asc)
-      tallOf("cold", cold).unionByName(tallOf("warm", warm))
-        .withColumn("pr_prev", lag(col("pr"), 1).over(w))
+      val steps = s.createDataFrame(
+        Seq("cold" -> cold, "warm" -> warm).flatMap { case (phase, pr) =>
+          pr.steps.zipWithIndex.map { case (step, i) =>
+            (phase, (i + 1).toLong, step)
+          }
+        }).toDF("phase", "round", "l1_delta")
+      tallOf("cold", cold.frames).unionByName(tallOf("warm", warm.frames))
         .join(fin, "doc_id")
         .groupBy(col("phase"), col("round"))
-        .agg(sum(abs(col("pr") - col("pr_prev"))).as("l1_delta"),
-          sum(abs(col("pr") - col("pr_fin"))).as("dist_to_final"))
+        .agg(sum(abs(col("pr") - col("pr_fin"))).as("dist_to_final"))
+        .join(steps, Seq("phase", "round"), "left")
         .select(col("phase"), col("round"), col("l1_delta"),
           col("dist_to_final"))
     },

@@ -281,8 +281,15 @@ object LlmOps {
     * ≈24 at 10×, capped at the session's cores. Env-overridable for
     * A/B isolation. */
   private[graft] val SPREAD_TARGET_BYTES =
-    sys.env.get("SPARK_GRAFT_SPREAD_BYTES").map(_.toLong)
+    numericKnob(sys.env.get("SPARK_GRAFT_SPREAD_BYTES"), _ > 0)
       .getOrElse(256L << 10)
+
+  /** A numeric env knob's value: `None` when unset, not an integer, or
+    * outside `valid`, so a malformed setting falls back to the default
+    * instead of throwing when a query is built. */
+  private[graft] def numericKnob(
+      raw: Option[String], valid: Long => Boolean): Option[Long] =
+    raw.flatMap(_.trim.toLongOption).filter(valid)
 
   private[graft] def spreadScan(df: DataFrame): DataFrame = {
     // width is env-tunable for A/B isolation (0 disables; a positive
@@ -294,7 +301,8 @@ object LlmOps {
     // CPU-dense derivations out. At cluster scale the scan brings
     // >= cores splits of its own and the helper is a no-op either way.
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    val p = sys.env.get("SPARK_GRAFT_SPREAD").map(_.toInt).getOrElse {
+    val p = numericKnob(sys.env.get("SPARK_GRAFT_SPREAD"),
+        w => w >= 0 && w <= Int.MaxValue).map(_.toInt).getOrElse {
       val bytes =
         try BigInt(df.queryExecution.optimizedPlan.stats.sizeInBytes
           .bigInteger).min(BigInt(Long.MaxValue)).toLong
@@ -822,19 +830,28 @@ object LlmOps {
 
   /** d5's pre-cap anchor table (per-doc [[ANCHORS]] smallest-hash
     * trigrams) — also the index surface d13_cap_report audits. */
-  private[graft] def anchorsOf(docs: DataFrame): DataFrame = {
+  private[graft] def anchorsOf(docs: DataFrame): DataFrame =
+    anchorsOfGrams(wordNgramHashesOf(docs, 3, "ng|"))
+
+  private def anchorsOfGrams(grams: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("doc_id")).orderBy(col("gh").asc)
-    wordNgramHashesOf(docs, 3, "ng|")
+    grams
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= ANCHORS)
       .select(col("doc_id"), col("gh").as("anchor"))
   }
 
   private[graft] def ngramPairStatsOf(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    // ONE trigram table feeds the anchors, the set sizes and both
+    // intersection join sides. The explicit not-null filters are the
+    // ones the joins would otherwise infer per consumer: with them
+    // stated once, every consumer's exchange over the distinct grams
+    // is the same subtree, so AQE reuses it and the scan → split →
+    // explode → hash chain runs once instead of once per consumer.
     val grams = wordNgramHashesOf(docs, 3, "ng|")
-    val anchors = anchorsOf(docs)
+      .filter(col("doc_id").isNotNull && col("gh").isNotNull)
+    val anchors = anchorsOfGrams(grams)
     // hot-anchor guard: one boilerplate gram shared by m docs would
     // otherwise emit m²/2 candidate pairs
     val kept = capBuckets(anchors, Seq("anchor"))
@@ -1056,9 +1073,13 @@ object LlmOps {
   //
   // Algorithm: iterative min-label propagation to a FIXPOINT —
   // lbl(v) ← min(lbl(v), min over neighbors lbl(u)) — each round one
-  // self-equi-join on the symmetrized edge list plus one hash-agg, with
-  // the frontier persisted and a changed-labels count as the
-  // convergence action. Rounds needed = graph diameter, and near-dup
+  // equi-join of the symmetrized edge list with the labels, unioned
+  // with every vertex's own row carrying its current label as `old`,
+  // and ONE hash-agg yielding (lbl, old) per vertex; the round is
+  // persisted and the convergence action is a count of its lbl < old
+  // rows (no second join against the previous labels). The round
+  // count comes back with the labels (CcLabels.rounds); DedupSpec pins
+  // it to the graph's depth. Rounds needed = graph diameter, and near-dup
   // components are anchor-bucket cliques glued at shared docs (diameter
   // a few hops), so the loop is O(few) rounds of narrow (v, lbl) long
   // pairs; an adversarial long-chain graph would call for the
@@ -1090,15 +1111,20 @@ object LlmOps {
         SELECT s.n AS v, r.lbl FROM reach r JOIN sym s ON s.v = r.v),
       labels AS (SELECT v, min(lbl) AS lbl FROM reach GROUP BY v)"""
 
+  /** Converged (v, lbl) component-min labels + the propagation round
+    * count (the seed round excluded). */
+  private[graft] final case class CcLabels(labels: DataFrame, rounds: Int)
+
   /** d7's min-label fixpoint over the near-dup pair graph — the ONE
-    * label computation, returning the persisted (v, lbl) frame pinned
-    * under `d7|app|dataset`. Shared by d7's per-doc report, d7b's size
+    * label computation, returning the (v, lbl) labels, read from the
+    * persisted last round pinned under `d7|app|dataset`, and the round
+    * count. Shared by d7's per-doc report, d7b's size
     * distribution, and the c1b/e4 cluster elections: every consumer
     * reads the label table itself instead of d7's per-doc report and
     * immediately re-aggregating/projecting away the cluster_size it
     * paid a broadcast join for (r9 — VERDICT r8 next-round #4). */
   private[graft] def ccLabelFixpoint(
-      s: SparkSession, d: String): DataFrame = {
+      s: SparkSession, d: String): CcLabels = {
       val pinKey = s"d7|${s.sparkContext.applicationId}|$d"
       pinned.remove(pinKey)
         .foreach(_.foreach(_.unpersist(blocking = false)))
@@ -1127,19 +1153,22 @@ object LlmOps {
       var converged = false
       var rounds = 0
       while (!converged && rounds < CC_MAX_ROUNDS) {
+        // the union carries each vertex's current label as `old`, so
+        // ONE groupBy yields (lbl, old) — no second next ⋈ lbl join
         val next = sym.as("s")
           .join(lbl.as("l"), col("s.n") === col("l.v"))
-          .select(col("s.v").as("v"), col("l.lbl").as("lbl"))
-          .union(lbl)
-          .groupBy(col("v")).agg(min(col("lbl")).as("lbl"))
+          .select(col("s.v").as("v"), col("l.lbl").as("lbl"),
+            lit(null).cast("long").as("old"))
+          .union(lbl.select(col("v"), col("lbl"), col("lbl").as("old")))
+          .groupBy(col("v"))
+          .agg(min(col("lbl")).as("lbl"), max(col("old")).as("old"))
           .persist()
         // labels only ever decrease under min-propagation, so one
         // strict-< count is a complete convergence test; it also
         // materializes next's cache, after which the superseded
         // frontier is dead weight — release it immediately rather than
         // letting round count multiply the cache footprint
-        val changed = next.as("a").join(lbl.as("b"), col("a.v") === col("b.v"))
-          .filter(col("a.lbl") < col("b.lbl")).count()
+        val changed = next.filter(col("lbl") < col("old")).count()
         lbl.unpersist(blocking = false)
         lbl = next
         converged = changed == 0
@@ -1148,17 +1177,15 @@ object LlmOps {
       // pin BEFORE the convergence check: if require throws, re-entry
       // and releaseCaches() can still find and release the frames
       pinned(pinKey) = Seq(sym, lbl)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc-debug] d7 rounds=$rounds")
       require(converged,
         s"d7: label propagation not at fixpoint after $CC_MAX_ROUNDS rounds")
-      lbl
+      CcLabels(lbl.select(col("v"), col("lbl")), rounds)
   }
 
   val d7DedupCc = Q(
     "d7_dedup_cc",
     (s, d) => {
-      val lbl = ccLabelFixpoint(s, d)
+      val lbl = ccLabelFixpoint(s, d).labels
       val cs = lbl.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
       // cluster count ≤ vertex count and shrinks with merging — the size
       // lookup is a textbook broadcast dimension
@@ -1328,7 +1355,7 @@ object LlmOps {
       // straight off the pinned label table: one hash-agg to sizes, one
       // to the distribution — no per-doc broadcast join + distinct of
       // d7's report just to throw the doc ids away (r9)
-      ccLabelFixpoint(s, d)
+      ccLabelFixpoint(s, d).labels
         .groupBy(col("lbl"))
         .agg(count(lit(1)).as("cluster_size"))
         .groupBy(col("cluster_size"))
@@ -4300,7 +4327,7 @@ object LlmOps {
     (s, d) => curateReport(s, d,
       // non-canonical = label differs from self; read off the pinned
       // label table, not d7's per-doc report (r9)
-      losers = Some(ccLabelFixpoint(s, d)
+      losers = Some(ccLabelFixpoint(s, d).labels
         .filter(col("v") =!= col("lbl"))
         .select(col("v").as("doc_id"))),
       fixture = "c1b_curated"),
@@ -4399,7 +4426,7 @@ object LlmOps {
       val langOf = documents(s, d).select(col("doc_id"), col("lang"))
       val cw = Window.partitionBy(col("lang"))
       // losers: near-dup cluster non-canonicals + c1c's two elections
-      val ccLosers = ccLabelFixpoint(s, d)
+      val ccLosers = ccLabelFixpoint(s, d).labels
         .filter(col("v") =!= col("lbl")).select(col("v").as("doc_id"))
       val lmLosers = lmScores(s, d, heldOutOnly = false)
         .join(langOf, Seq("doc_id"))

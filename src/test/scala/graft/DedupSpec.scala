@@ -216,6 +216,27 @@ class DedupSpec extends SparkSuite {
     // than any single pair
     assert(sizes.values.max >= 3L,
       "fixture graph should chain at least one 3-doc component")
+    // round count: after the seed round every vertex holds the minimum
+    // of its radius-1 ball, and each propagation round widens that ball
+    // by one hop. The last change lands at R, the farthest any vertex
+    // sits from its component minimum, and a round then finds nothing
+    // to change — max(1, R) rounds exactly.
+    val adj = (pairs ++ pairs.map(_.swap)).groupMap(_._1)(_._2)
+      .withDefaultValue(Array.empty[Long])
+    val depth = expected.values.toSeq.distinct.map { root =>
+      var frontier = Set(root)
+      var seen = frontier
+      var d = 0
+      while (frontier.nonEmpty) {
+        frontier = frontier.flatMap(adj(_)) -- seen
+        seen ++= frontier
+        if (frontier.nonEmpty) d += 1
+      }
+      d
+    }.max
+    val cc = graft.operators.LlmOps.ccLabelFixpoint(spark, sf)
+    assert(cc.rounds === math.max(1, depth),
+      s"label propagation took ${cc.rounds} rounds; graph depth $depth")
   }
 
   test("D8: star contraction matches d7 labels on the real near-dup graph") {

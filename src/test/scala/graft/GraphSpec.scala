@@ -12,7 +12,11 @@ class GraphSpec extends SparkSuite {
   import spark.implicits._
 
   /** The g1 recurrence in plain Scala collections. */
-  private def referencePr(n: Long): Map[Long, Long] = {
+  private def referencePr(n: Long): Map[Long, Long] =
+    referencePrRounds(n).last
+
+  /** Every round r0..r[[Graph.PR_ITERS]] of [[referencePr]]. */
+  private def referencePrRounds(n: Long): Seq[Map[Long, Long]] = {
     val outdeg = (0L until n).map(u => u -> u % 4).toMap
     val edges = (0L until n).flatMap { u =>
       (0L until (u % 4)).map { k =>
@@ -21,6 +25,8 @@ class GraphSpec extends SparkSuite {
       }
     }
     var pr = (0L until n).map(u => u -> Graph.PR_SCALE / n).toMap
+    val rounds = Seq.newBuilder[Map[Long, Long]]
+    rounds += pr
     for (_ <- 1 to Graph.PR_ITERS) {
       val recv = edges
         .groupBy(_._2)
@@ -32,8 +38,9 @@ class GraphSpec extends SparkSuite {
         v -> (15L * (Graph.PR_SCALE / n) / 100L +
           Graph.PR_DAMP_PCT * (recv.getOrElse(v, 0L) + dang / n) / 100L)
       }.toMap
+      rounds += pr
     }
-    pr
+    rounds.result()
   }
 
   test("G1: distributed ranks equal the independent integer recurrence") {
@@ -148,9 +155,9 @@ class GraphSpec extends SparkSuite {
     // damping 0.85 contracts the L1 error geometrically, so each
     // round's delta must be strictly below the previous until the
     // integer-truncation floor; a flat or rising step means a round
-    // re-read a stale frame or dropped mass. Also cross-check round 1
-    // against the independent recurrence: Σ|r1 − r0| recomputed from
-    // referencePr's arithmetic.
+    // re-read a stale frame or dropped mass. Every step is also
+    // cross-checked EXACTLY against the independent recurrence:
+    // Σ|r_i − r_{i−1}| recomputed from referencePr's arithmetic.
     val n = 40L
     val docs = (0L until n).map(id => (id, "x", "en", "s1"))
       .toDF("doc_id", "text", "lang", "source")
@@ -162,6 +169,12 @@ class GraphSpec extends SparkSuite {
     assert(rows.map(_._1).toSeq === (1L to Graph.PR_ITERS.toLong),
       "one delta row per round")
     val deltas = rows.map(_._2)
+    val ref = referencePrRounds(n)
+    val want = ref.zip(ref.tail).map { case (prev, cur) =>
+      cur.keys.toSeq.map(v => math.abs(cur(v) - prev(v))).sum
+    }
+    assert(deltas.toSeq === want,
+      "every per-round L1 step equals the independent recompute")
     deltas.zip(deltas.tail).zipWithIndex.foreach {
       case ((a, b), i) =>
         assert(b < a,

@@ -181,4 +181,26 @@ class OptimizationShapeSpec extends SparkSuite {
     assert(operators.LlmOps.spreadScan(wide).rdd.getNumPartitions
       === p + 3, "spreadScan must not touch already-wide frames")
   }
+
+  test("spread env knobs: malformed or out-of-range values fall back " +
+      "to the default instead of throwing") {
+    import operators.LlmOps.numericKnob
+    val bytes = (b: Long) => b > 0
+    val width = (w: Long) => w >= 0 && w <= Int.MaxValue
+    // well-formed values pass through (surrounding blanks tolerated)
+    assert(numericKnob(Some("65536"), bytes) === Some(65536L))
+    assert(numericKnob(Some(" 8 "), width) === Some(8L))
+    assert(numericKnob(Some("0"), width) === Some(0L), "0 disables spread")
+    // unset, malformed, or out of range: no value, so the default holds
+    Seq(None, Some(""), Some("abc"), Some("1.5"), Some("256k"),
+      Some("99999999999999999999")).foreach { raw =>
+      assert(numericKnob(raw, bytes) === None, s"bytes knob $raw")
+      assert(numericKnob(raw, width) === None, s"width knob $raw")
+    }
+    assert(numericKnob(Some("0"), bytes) === None,
+      "a zero target would divide by zero in spreadScan")
+    assert(numericKnob(Some("-4"), width) === None)
+    assert(numericKnob(Some("4294967296"), width) === None,
+      "a width past Int range must not wrap")
+  }
 }

@@ -5,11 +5,30 @@ package graft
   * instead of waiting for a manual audit. Each materializes its
   * queryExecution (AQE finalizes plans only after a run). */
 class PlanInvariantsSpec extends SparkSuite {
+  import org.apache.spark.sql.execution.SparkPlan
 
   private def finalPlan(name: String): String = {
     val qe = SparkEntry.queries(name)(spark, sf).queryExecution
     qe.toRdd.count()
     qe.executedPlan.toString.split("== Initial Plan ==").head
+  }
+
+  /** Every node of `name`'s final adaptive plan after a run, through
+    * its query stages. A TREE, not the plan string: InMemoryTableScan
+    * PRINTS its cached relation's build plan, and a reused exchange
+    * prints the subtree it reuses, but neither executes here — tree
+    * collection sees only the real operators (ADVICE r19/r20). */
+  private def finalNodes(name: String): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{
+      AdaptiveSparkPlanExec, QueryStageExec}
+    def whole(p: SparkPlan): Seq[SparkPlan] = p.collect {
+      case a: AdaptiveSparkPlanExec => whole(a.executedPlan)
+      case s: QueryStageExec => whole(s.plan)
+      case other => Seq(other)
+    }.flatten
+    val qe = SparkEntry.queries(name)(spark, sf).queryExecution
+    qe.toRdd.count()
+    whole(qe.executedPlan)
   }
 
   test("s5/a1b/a7: packed-long argmax stays a HashAggregate — no " +
@@ -77,10 +96,28 @@ class PlanInvariantsSpec extends SparkSuite {
   }
 
   test("d7: the cluster-size lookup broadcasts; labels read from cache") {
-    val p = finalPlan("d7_dedup_cc")
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(p.contains("InMemoryTableScan"),
-      s"fixpoint labels must come from the persisted frontier:\n$p")
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val nodes = finalNodes("d7_dedup_cc")
+    assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+      "the cluster-size lookup must broadcast")
+    assert(nodes.exists(_.isInstanceOf[InMemoryTableScanExec]),
+      "fixpoint labels must come from the persisted frontier")
+  }
+
+  test("d5: the trigram table derives ONCE — one Generate, every other " +
+      "consumer reuses its exchange") {
+    // the anchors, the set sizes and both intersection join sides all
+    // read one distinct-trigram frame; with identical not-null filters
+    // their exchanges canonicalize alike and AQE reuses the first, so
+    // the scan → split → explode → hash chain executes once (it ran
+    // three times when each consumer got its own inferred filters)
+    import org.apache.spark.sql.execution.GenerateExec
+    val nodes = finalNodes("d5_ngram_jaccard")
+    val gens = nodes.count(_.isInstanceOf[GenerateExec])
+    assert(gens === 1,
+      s"d5's final plan executes $gens trigram Generate nodes — the " +
+        "trigram table is being re-derived per consumer")
   }
 
   test("runtime bloom filter reduces the fact side of a selective " +
@@ -219,20 +256,9 @@ class PlanInvariantsSpec extends SparkSuite {
     // PRINTS its cached relation's build plan (bucket exchanges and
     // all), but the cached subtree is not executed — tree collection
     // sees only the real stages (the ADVICE r19 string-vs-tree note).
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{
-      AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    val qe = SparkEntry.queries("a17_nsw_search")(spark, sf)
-      .queryExecution
-    qe.toRdd.count()
-    def whole(p: SparkPlan): Seq[SparkPlan] = p.collect {
-      case a: AdaptiveSparkPlanExec => whole(a.executedPlan)
-      case s: QueryStageExec => whole(s.plan)
-      case other => Seq(other)
-    }.flatten
-    val nodes = whole(qe.executedPlan)
+    val nodes = finalNodes("a17_nsw_search")
     assert(nodes.exists(_.isInstanceOf[InMemoryTableScanExec]),
       "final a17 plan lost the pinned edge index")
     assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]),
