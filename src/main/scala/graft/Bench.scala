@@ -7,8 +7,18 @@ object Bench {
     * What's-wrong 2). Env-overridable for one-off probes (the 10× scale
     * probe cares about scaling ratios, not ±10% noise, and 3 passes at
     * 10× data is an hour of wall-clock). */
-  private val PASSES =
-    sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
+  private val PASSES = passes(sys.env.get("SPARK_GRAFT_PASSES"))
+
+  /** The pass count: a positive integer, else the default 3. */
+  private[graft] def passes(raw: Option[String]): Int =
+    operators.LlmOps.numericKnob(raw, p => p > 0 && p <= Int.MaxValue)
+      .map(_.toInt).getOrElse(3)
+
+  /** `SPARK_GRAFT_CACHE_AQE` as the boolean conf value: "true" or
+    * "false" in any case (blanks tolerated), anything else the default
+    * true. */
+  private[graft] def cacheAqe(raw: Option[String]): Boolean =
+    raw.flatMap(_.trim.toBooleanOption).getOrElse(true)
 
   /** JSON string escape (same table as Verify's oracle_sql writer): a
     * canary dir containing a quote/backslash/control char would
@@ -53,7 +63,7 @@ object Bench {
       // setting is right on a cluster.
       // env-overridable for A/B isolation of this one setting
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
+        cacheAqe(sys.env.get("SPARK_GRAFT_CACHE_AQE")))
       // r21 A/B (guide §2.2): lowering AQE's coalescing floor
       // (minPartitionSize 1m -> 64k) was MEASURED WORSE on the
       // text-heavy subset (load-adjusted 32.5 s vs 28.1 s,

@@ -27,6 +27,9 @@ object MemAudit {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
+      // the cached-plan shape Bench and the benchmark run (Bench.scala)
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+        "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -33,6 +33,23 @@ object Prof {
       * 25-branch union; the stage name carries the callsite. */
     val stageRows =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int, String)]
+    /** Lets straggler listener events land before the counters are read
+      * (listenerBus.waitUntilEmpty is private[spark]): polls every 50 ms
+      * and returns once two reads in a row agree, or after 100 polls. */
+    def drain(): Unit = {
+      def read = (jobs.get, stages.get, tasks.get, taskTimeMs.get,
+        shufRead.get, shufWrite.get, gcMs.get)
+      var last = read
+      var polls = 0
+      var settled = false
+      while (!settled && polls < 100) {
+        Thread.sleep(50)
+        val now = read
+        settled = now == last
+        last = now
+        polls += 1
+      }
+    }
     override def onJobStart(j: SparkListenerJobStart): Unit =
       jobs.incrementAndGet()
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
@@ -101,10 +118,7 @@ object Prof {
         } catch { case e: Throwable =>
           System.err.println(s"[prof] $name failed: $e"); -1.0 }
       operators.LlmOps.releaseCaches()
-      // let straggler listener events drain before reading counters
-      // (listenerBus.waitUntilEmpty is private[spark]; a short sleep is
-      // enough for a measurement tool)
-      Thread.sleep(300)
+      acc.drain()
       spark.sparkContext.removeSparkListener(acc)
       println(f"""{"name":"$name","wall":$wall%.3f,"jobs":${acc.jobs.get},"stages":${acc.stages.get},"tasks":${acc.tasks.get},"taskTimeSec":${acc.taskTimeMs.get / 1e3}%.2f,"gcSec":${acc.gcMs.get / 1e3}%.2f,"shufReadMB":${acc.shufRead.get / 1e6}%.2f,"shufWriteMB":${acc.shufWrite.get / 1e6}%.2f}""")
       // top stages by summed task time — SPARK_GRAFT_PROF_STAGES=n

@@ -1,8 +1,5 @@
 package graft.functions
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.security.MessageDigest
-
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes}
@@ -102,20 +99,9 @@ object CmSketch {
   val D = 4
   val W = 64
 
-  /** JVM twin of `Portable.h60(tok, s"cm$i|") % W`: md5 over the UTF-8
-    * seed‖token bytes, first 15 lowercase-hex digits as a base-16
-    * long — the Spark `conv(substring(md5(..),1,15),16,10)` chain
-    * computed directly. */
-  private[functions] def bucket(i: Int, tok: String): Int = {
-    val d = MessageDigest.getInstance("MD5")
-      .digest(s"cm$i|$tok".getBytes(UTF_8))
-    // first 15 hex digits = 7 full bytes + the high nibble of byte 7
-    var h = 0L
-    var j = 0
-    while (j < 7) { h = (h << 8) | (d(j) & 0xffL); j += 1 }
-    h = (h << 4) | ((d(7) & 0xf0L) >> 4)
-    (h % W).toInt
-  }
+  /** JVM twin of `Portable.h60(tok, s"cm$i|") % W`. */
+  private[functions] def bucket(i: Int, tok: String): Int =
+    (Portable.h60Jvm(s"cm$i|$tok") % W).toInt
 
   /** Test hook: CmSketchSpec pins [[bucket]] against the relational
     * `Portable.h60 % W` so the JVM twin cannot drift. */

@@ -1,5 +1,8 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -30,13 +33,21 @@ object Portable {
     s"CAST(concat('0x', substring(md5(concat('$seed', $inner)), 1, 15)) AS BIGINT)"
 
   /** The same hash computed JVM-side (seed pre-concatenated by the
-    * caller) — for serving paths that score single rows in a task
-    * closure (StreamingJobs.streamingQualityRoute) and for spec
+    * caller) — for code that hashes single rows in a task closure
+    * (StreamingJobs.streamingQualityRoute, CmSketch) and for spec
     * replays; bit-identical to [[h60]]/[[h60Duck]] because md5 of the
     * UTF-8 bytes is md5 of the UTF-8 bytes. */
   def h60Jvm(s: String): Long =
-    java.lang.Long.parseLong(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString.take(15), 16)
+    h60Digest(MessageDigest.getInstance("MD5").digest(s.getBytes(UTF_8)))
+
+  /** [[h60]] read straight off a 16-byte md5 digest: the first 15 hex
+    * digits of the digest are its 7 leading bytes plus the high nibble of
+    * byte 7, so no hex string is built and parsed back. Per-row callers
+    * keep one `MessageDigest` and digest into a reused buffer. */
+  def h60Digest(md5: Array[Byte]): Long = {
+    var h = 0L
+    var j = 0
+    while (j < 7) { h = (h << 8) | (md5(j) & 0xffL); j += 1 }
+    (h << 4) | ((md5(7) & 0xf0L) >>> 4)
+  }
 }

@@ -99,6 +99,9 @@ object Multimodal {
       substring(hex(encode(text)), 1, 8) AS magic_hex
       FROM documents"""))
 
+  private val HEX_UPPER: Array[Byte] =
+    "0123456789ABCDEF".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+
   /** 60-bit payload checksum: md5 of the UPPERCASE hex encoding of the
     * bytes, first 15 hex digits as a long — the same portable-h60 identity
     * the engine uses everywhere (functions/Portable.scala), computed here
@@ -107,11 +110,16 @@ object Multimodal {
     * BIGINT)`, which is what makes the decode stage oracle-checkable.
     */
   def payloadChecksum(payload: Array[Byte]): Long = {
-    val hexStr = payload.map(b => f"${b & 0xff}%02X").mkString
-    val dig = java.security.MessageDigest.getInstance("MD5")
-      .digest(hexStr.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val hx = dig.take(8).map(b => f"${b & 0xff}%02x").mkString.take(15)
-    java.lang.Long.parseLong(hx, 16)
+    // the hex text as ASCII bytes, two per payload byte
+    val hex = new Array[Byte](payload.length * 2)
+    var i = 0
+    while (i < payload.length) {
+      hex(2 * i) = HEX_UPPER((payload(i) >> 4) & 0xf)
+      hex(2 * i + 1) = HEX_UPPER(payload(i) & 0xf)
+      i += 1
+    }
+    graft.functions.Portable.h60Digest(
+      java.security.MessageDigest.getInstance("MD5").digest(hex))
   }
 
   // ---------------------------------------------------------------------

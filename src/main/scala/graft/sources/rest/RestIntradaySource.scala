@@ -1,9 +1,11 @@
 package graft.sources.rest
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 import java.time.LocalDate
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -11,6 +13,8 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOr
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.Portable
 
 /** DataSource V2 connector restating the reference's REST JSON sources
   * (SURVEY §2.1 S2/S3/S4) Spark-first:
@@ -48,7 +52,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Row shape after the P5 flatten the reference applies
   * (fitbit_utils.py:374-388): (resource, date, time, value).
-  * value = h60("iv|resource|date|time") % 1000.
+  * value = `Portable.h60(resource|date|time, "iv|") % 1000`, generated
+  * per row by [[RestPartitionReader]].
   */
 class RestIntradaySource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -318,24 +323,33 @@ object RestIntradaySource {
     else if (isThirtyDay(resource)) 1
     else MINUTES_PER_DAY
 
-  /** Portable 60-bit hash — bit-identical to functions.Portable.h60 and
-    * the DuckDB fragment (first 15 hex digits of md5 as a long). */
-  def h60(s: String): Long = {
-    val d = MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    val hex = d.map(b => f"$b%02x").mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
+  /** Length of a resource's ASCII time string: "HH:mm:ss" for heart,
+    * "HH:mm" otherwise (thirty-day rows are "00:00"). */
+  private[rest] def timeLength(resource: String): Int =
+    if (resource == "heart") 8 else 5
+
+  /** Writes the time of the `i`-th row of a day into `out` at `at`, as
+    * ASCII digits: i is the second of the day for an 8-byte time
+    * ("HH:mm:ss"), else the minute of the day ("HH:mm"; a thirty-day
+    * resource's single row is i = 0, "00:00"). */
+  private[rest] def writeTime(
+      i: Int, out: Array[Byte], at: Int, len: Int): Unit =
+    if (len == 8) {
+      twoDigits(i / 3600, out, at)
+      out(at + 2) = ':'
+      twoDigits(i / 60 % 60, out, at + 3)
+      out(at + 5) = ':'
+      twoDigits(i % 60, out, at + 6)
+    } else {
+      twoDigits(i / 60, out, at)
+      out(at + 2) = ':'
+      twoDigits(i % 60, out, at + 3)
+    }
+
+  private def twoDigits(v: Int, out: Array[Byte], at: Int): Unit = {
+    out(at) = ('0' + v / 10).toByte
+    out(at + 1) = ('0' + v % 10).toByte
   }
-
-  /** Time-of-day string for the i-th row of a resource's day. */
-  def timeStr(resource: String, i: Int): String =
-    if (resource == "heart")
-      f"${i / 3600}%02d:${i / 60 % 60}%02d:${i % 60}%02d"
-    else if (isThirtyDay(resource)) "00:00"
-    else f"${i / 60}%02d:${i % 60}%02d"
-
-  def value(resource: String, date: String, time: String): Long =
-    h60(s"iv|$resource|$date|$time") % 1000
 
   /** Fetch-unit planning shared by the batch scan and the micro-batch
     * stream: intraday resources get one partition per (resource, day);
@@ -594,88 +608,143 @@ final class RestReaderFactory(
     fetch: RestFetchOptions = RestFetchOptions.default,
     limiterKey: String = "default")
   extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[RestPartition]
-    new PartitionReader[InternalRow] {
-      // production: HTTP GET the partition's URL here, honoring
-      // rate-limit headers; canned deterministic payload instead. A
-      // zero-date partition is the 404 path (F6, utils.py:349-351):
-      // the reader yields zero rows and the job proceeds — the dropped
-      // day never surfaces downstream, no error propagation.
-      private val perDay = RestIntradaySource.rowsPerDay(part.resource)
-      private val total = part.dates.length * perDay
-      private var i = -1
-      private var fetched = false
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new RestPartitionReader(p.asInstanceOf[RestPartition], required, fetch,
+      limiterKey)
+}
 
-      /** One "request" per fetch unit, with the connector's fetch
-        * discipline: pace via the shared per-JVM bucket, present the
-        * scan's current credential, then handle the failure classes the
-        * reference handles — 401 refreshes the token (single-flight)
-        * and retries immediately (fresh credential, not rate pressure,
-        * so no backoff sleep; fitbit_utils.py:157-185), a retriable
-        * 429/5xx retries with exponential backoff
-        * (fitbit_utils.py:38-43,309-329; utils.py:337-347) — each up to
-        * maxRetries before failing LOUDLY. Lazy: a pruned-away
-        * partition never spends a request. */
-      private def fetchOnce(): Unit = {
-        val limiter = fetch.maxRequestsPerSecond
-          .map(RestFetchRuntime.limiter(limiterKey, _))
-        val tokState = RestFetchRuntime.tokenState(limiterKey, fetch)
-        val failing = fetch.fail429Count > 0 &&
-          part.dates.exists(fetch.fail429Dates)
-        var attempt = 0
-        var ok = false
-        while (!ok) {
-          limiter.foreach(_.acquire())
-          RestFetchRuntime.requests.incrementAndGet()
-          val tok = tokState.map(_.current)
-          if (fetch.fail401MinGen > 0 &&
-              RestFetchRuntime.tokenGen(tok.getOrElse("")) <
-                fetch.fail401MinGen) {
-            RestFetchRuntime.simulated401s.incrementAndGet()
-            if (attempt >= fetch.maxRetries)
-              throw new java.io.IOException(
-                s"HTTP 401 (simulated) for ${part.resource} " +
-                  s"${part.dates.headOption.getOrElse("-")}: token still " +
-                  s"rejected after ${attempt + 1} attempts " +
-                  s"(maxRetries=${fetch.maxRetries})")
-            val state = tokState.getOrElse(throw new IllegalStateException(
-              s"HTTP 401 (simulated) for ${part.resource} and no `token`/" +
-                "`tokenProvider` configured — the request cannot be " +
-                "authenticated"))
-            state.refreshFrom(tok.get)
-            attempt += 1
-          } else if (failing && attempt < fetch.fail429Count) {
-            RestFetchRuntime.simulated429s.incrementAndGet()
-            if (attempt >= fetch.maxRetries)
-              throw new java.io.IOException(
-                s"HTTP 429 (simulated) for ${part.resource} " +
-                  s"${part.dates.headOption.getOrElse("-")} after " +
-                  s"${attempt + 1} attempts (maxRetries=${fetch.maxRetries})")
-            Thread.sleep(fetch.retryBackoffMs << attempt)
-            attempt += 1
-          } else ok = true
-        }
-        fetched = true
-      }
+/** Reads one fetch unit, for the batch scan and the micro-batch stream
+  * alike.
+  *
+  * production: HTTP GET the partition's URL here, honoring rate-limit
+  * headers; canned deterministic payload instead. A zero-date partition
+  * is the 404 path (F6, utils.py:349-351): the reader yields zero rows
+  * and the job proceeds — the dropped day never surfaces downstream, no
+  * error propagation.
+  *
+  * The payload row `i` of a day has value = h60("iv|resource|date|time")
+  * % 1000. Everything but the time is built once: the resource and date
+  * strings, and the ASCII message prefix "iv|resource|date|" (once per
+  * date). Each row writes its time digits in place after that prefix,
+  * digests the message with the reader's one `MessageDigest`, and reads
+  * h60 straight off the digest bytes ([[graft.functions.Portable.h60Digest]]),
+  * so no row formats or parses a string. The row's columns follow
+  * `required`, resolved to schema ordinals once. One `GenericInternalRow`
+  * is refilled per row: the batch and micro-batch scans are both planned
+  * under a `ProjectExec` whose `UnsafeProjection` copies each row before
+  * the next is read (RestSourceSpec reads it under both).
+  */
+final class RestPartitionReader(
+    part: RestPartition, required: StructType, fetch: RestFetchOptions,
+    limiterKey: String)
+  extends PartitionReader[InternalRow] {
+  private val perDay = RestIntradaySource.rowsPerDay(part.resource)
+  private val total = part.dates.length * perDay
+  private var i = -1
+  private var fetched = false
 
-      override def next(): Boolean = {
-        if (!fetched && total > 0) fetchOnce()
-        i += 1; i < total
-      }
-      override def get(): InternalRow = {
-        val date = part.dates(i / perDay)
-        val t = RestIntradaySource.timeStr(part.resource, i % perDay)
-        val cols = required.fieldNames.map {
-          case "resource" => UTF8String.fromString(part.resource)
-          case "date" => UTF8String.fromString(date)
-          case "time" => UTF8String.fromString(t)
-          case "value" => java.lang.Long.valueOf(
-            RestIntradaySource.value(part.resource, date, t))
-        }
-        InternalRow.fromSeq(cols.toIndexedSeq)
-      }
-      override def close(): Unit = ()
+  // the schema ordinal (resource 0, date 1, time 2, value 3) of each
+  // output column
+  private val cols: Array[Int] =
+    required.fieldNames.map(RestIntradaySource.SCHEMA.fieldIndex)
+  private val row = new GenericInternalRow(cols.length)
+  private val resource = UTF8String.fromString(part.resource)
+  private val timeLen = RestIntradaySource.timeLength(part.resource)
+  private val md5 = MessageDigest.getInstance("MD5")
+  private val digest = new Array[Byte](16)
+  // the current day's date, and "iv|resource|date|" plus timeLen bytes
+  // for the row's time, which starts at timeAt
+  private var date: UTF8String = _
+  private var msg: Array[Byte] = _
+  private var timeAt = 0
+
+  /** One "request" per fetch unit, with the connector's fetch
+    * discipline: pace via the shared per-JVM bucket, present the
+    * scan's current credential, then handle the failure classes the
+    * reference handles — 401 refreshes the token (single-flight)
+    * and retries immediately (fresh credential, not rate pressure,
+    * so no backoff sleep; fitbit_utils.py:157-185), a retriable
+    * 429/5xx retries with exponential backoff
+    * (fitbit_utils.py:38-43,309-329; utils.py:337-347) — each up to
+    * maxRetries before failing LOUDLY. Lazy: a pruned-away
+    * partition never spends a request. */
+  private def fetchOnce(): Unit = {
+    val limiter = fetch.maxRequestsPerSecond
+      .map(RestFetchRuntime.limiter(limiterKey, _))
+    val tokState = RestFetchRuntime.tokenState(limiterKey, fetch)
+    val failing = fetch.fail429Count > 0 &&
+      part.dates.exists(fetch.fail429Dates)
+    var attempt = 0
+    var ok = false
+    while (!ok) {
+      limiter.foreach(_.acquire())
+      RestFetchRuntime.requests.incrementAndGet()
+      val tok = tokState.map(_.current)
+      if (fetch.fail401MinGen > 0 &&
+          RestFetchRuntime.tokenGen(tok.getOrElse("")) <
+            fetch.fail401MinGen) {
+        RestFetchRuntime.simulated401s.incrementAndGet()
+        if (attempt >= fetch.maxRetries)
+          throw new java.io.IOException(
+            s"HTTP 401 (simulated) for ${part.resource} " +
+              s"${part.dates.headOption.getOrElse("-")}: token still " +
+              s"rejected after ${attempt + 1} attempts " +
+              s"(maxRetries=${fetch.maxRetries})")
+        val state = tokState.getOrElse(throw new IllegalStateException(
+          s"HTTP 401 (simulated) for ${part.resource} and no `token`/" +
+            "`tokenProvider` configured — the request cannot be " +
+            "authenticated"))
+        state.refreshFrom(tok.get)
+        attempt += 1
+      } else if (failing && attempt < fetch.fail429Count) {
+        RestFetchRuntime.simulated429s.incrementAndGet()
+        if (attempt >= fetch.maxRetries)
+          throw new java.io.IOException(
+            s"HTTP 429 (simulated) for ${part.resource} " +
+              s"${part.dates.headOption.getOrElse("-")} after " +
+              s"${attempt + 1} attempts (maxRetries=${fetch.maxRetries})")
+        Thread.sleep(fetch.retryBackoffMs << attempt)
+        attempt += 1
+      } else ok = true
     }
+    fetched = true
   }
+
+  private def startDay(d: String): Unit = {
+    date = UTF8String.fromString(d)
+    val prefix = s"iv|${part.resource}|$d|".getBytes(UTF_8)
+    msg = java.util.Arrays.copyOf(prefix, prefix.length + timeLen)
+    timeAt = prefix.length
+  }
+
+  private def value(): Long = {
+    md5.update(msg)
+    md5.digest(digest, 0, digest.length)
+    Portable.h60Digest(digest) % 1000
+  }
+
+  override def next(): Boolean = {
+    if (!fetched && total > 0) fetchOnce()
+    i += 1
+    if (i < total && i % perDay == 0) startDay(part.dates(i / perDay))
+    i < total
+  }
+
+  override def get(): InternalRow = {
+    RestIntradaySource.writeTime(i % perDay, msg, timeAt, timeLen)
+    var c = 0
+    while (c < cols.length) {
+      cols(c) match {
+        case 0 => row.update(c, resource)
+        case 1 => row.update(c, date)
+        case 2 => row.update(c, UTF8String.fromBytes(
+          java.util.Arrays.copyOfRange(msg, timeAt, msg.length)))
+        case _ => row.setLong(c, value())
+      }
+      c += 1
+    }
+    row
+  }
+
+  override def close(): Unit = ()
 }

@@ -203,4 +203,22 @@ class OptimizationShapeSpec extends SparkSuite {
     assert(numericKnob(Some("4294967296"), width) === None,
       "a width past Int range must not wrap")
   }
+
+  test("bench env knobs: SPARK_GRAFT_PASSES takes only a positive count " +
+      "and SPARK_GRAFT_CACHE_AQE only true/false; anything else falls " +
+      "back to the default") {
+    assert(Bench.passes(Some("5")) === 5)
+    assert(Bench.passes(Some(" 1 ")) === 1)
+    Seq(None, Some(""), Some("0"), Some("-3"), Some("two"), Some("2.5"),
+      Some("4294967296")).foreach { raw =>
+      assert(Bench.passes(raw) === 3, s"passes $raw")
+    }
+    assert(!Bench.cacheAqe(Some("false")))
+    assert(!Bench.cacheAqe(Some(" FALSE ")))
+    assert(Bench.cacheAqe(Some("True")))
+    Seq(None, Some(""), Some("0"), Some("no"), Some("off"),
+      Some("flase")).foreach { raw =>
+      assert(Bench.cacheAqe(raw), s"cache AQE $raw")
+    }
+  }
 }

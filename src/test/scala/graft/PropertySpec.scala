@@ -21,6 +21,27 @@ class PropertySpec extends SparkSuite {
       p
     }
 
+  test("H60: the JVM h60 equals the relational Portable.h60 column on " +
+      "random strings, non-ASCII included") {
+    import org.apache.spark.sql.functions.col
+    // code points from ASCII, Latin-1, CJK and the supplementary planes
+    // (surrogate pairs in the JVM string, 4-byte UTF-8)
+    val codePoint: Gen[Int] = Gen.frequency(
+      4 -> Gen.chooseNum(0x20, 0x7e), 1 -> Gen.chooseNum(0xa0, 0xff),
+      1 -> Gen.chooseNum(0x4e00, 0x9fff), 1 -> Gen.chooseNum(0x1f300, 0x1faff))
+    val strings: Gen[String] = Gen.chooseNum(0, 40).flatMap(n =>
+      Gen.listOfN(n, codePoint).map(cps => new String(cps.toArray, 0, cps.length)))
+    val xs = (0 until 1000).map(i =>
+      strings.pureApply(Gen.Parameters.default, Seed(9000L + i))).distinct
+    assert(xs.exists(_.exists(_ > 0x7f)), "the sample must hold non-ASCII")
+    val rel = xs.toDF("s")
+      .select(col("s"), functions.Portable.h60(col("s"), "pp|"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(rel.size === xs.size)
+    xs.foreach(x => assert(functions.Portable.h60Jvm("pp|" + x) === rel(x),
+      s"h60 mismatch for '$x'"))
+  }
+
   test("U1: union row count is the sum of input row counts") {
     samples(10).foreach { case (xs, ys) =>
       assert(xs.toDF("id").unionByName(ys.toDF("id")).count() ===

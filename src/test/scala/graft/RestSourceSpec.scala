@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.Portable
 import graft.sources.rest.RestIntradaySource
 
 /** DSv2 REST source: partition pruning via pushed filters, column
@@ -59,9 +60,91 @@ class RestSourceSpec extends SparkSuite {
       .filter(col("date") === "2024-01-03" && col("resource") === "heart" &&
         col("time") === "07:30:00")
       .select("value").collect().head.getLong(0)
-    assert(row === RestIntradaySource.value("heart", "2024-01-03", "07:30:00"))
-    assert(row ===
-      RestIntradaySource.h60("iv|heart|2024-01-03|07:30:00") % 1000)
+    assert(row === Portable.h60Jvm("iv|heart|2024-01-03|07:30:00") % 1000)
+  }
+
+  /** The payload every reader must produce, derived relationally and
+    * independently of it: the day's times from a range, the value from
+    * the `Portable.h60` column (md5 → conv, the chain the DuckDB oracle
+    * mirrors). */
+  private def relational(resource: String, dates: Seq[String]) = {
+    import spark.implicits._
+    val i = col("id")
+    val time =
+      if (resource == "heart") format_string("%02d:%02d:%02d",
+        (i / 3600).cast("int"), (i / 60 % 60).cast("int"), (i % 60).cast("int"))
+      else format_string("%02d:%02d", (i / 60).cast("int"), (i % 60).cast("int"))
+    spark.range(RestIntradaySource.rowsPerDay(resource))
+      .crossJoin(dates.toDF("date"))
+      .select(lit(resource).as("resource"), col("date"), time.as("time"))
+      .withColumn("value", Portable.h60(
+        concat_ws("|", col("resource"), col("date"), col("time")), "iv|") % 1000)
+  }
+
+  private def sameRows(
+      got: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame, shape: String): Unit = {
+    assert(got.columns.toSeq === want.columns.toSeq, shape)
+    assert(got.count() === want.count(), shape)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      s"$shape: reader rows differ from the relational h60")
+  }
+
+  test("every reader value equals the relational Portable.h60, for a full " +
+      "day of every intraday resource and a thirty-day window, under " +
+      "pruned, reordered and micro-batch reads") {
+    val day = "2024-02-29"
+    val intraday = RestIntradaySource.INTRADAY_RESOURCES
+    def read(resources: Seq[String], start: String, end: String) =
+      spark.read.format("graft.sources.rest.RestIntradaySource")
+        .option("resources", resources.mkString(","))
+        .option("start", start).option("end", end).load()
+    val got = read(intraday, day, day)
+      .union(read(Seq("hrv"), "2024-02-01", "2024-03-01"))
+    val hrvDates = (0 until 30).map(d =>
+      java.time.LocalDate.parse("2024-02-01").plusDays(d).toString)
+    val want = intraday.map(relational(_, Seq(day)))
+      .reduce(_ union _).union(relational("hrv", hrvDates))
+    assert(want.count() === 96480L + 30L)
+    sameRows(got, want, "all columns")
+    sameRows(got.select("value"), want.select("value"), "value alone")
+    sameRows(got.select("time", "value", "resource"),
+      want.select("time", "value", "resource"), "time, value, resource")
+    // the scan is planned under a ProjectExec, whose UnsafeProjection
+    // copies each row before the reader refills it
+    def projectsRows(plan: org.apache.spark.sql.execution.SparkPlan) = {
+      import org.apache.spark.sql.execution._
+      import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanExecBase
+      def isScan(p: SparkPlan): Boolean = p match {
+        case a: InputAdapter => isScan(a.child)
+        case _: DataSourceV2ScanExecBase => true
+        case _ => false
+      }
+      val parents = plan.collect {
+        case p if !p.isInstanceOf[InputAdapter] && p.children.exists(isScan) => p
+      }
+      parents.nonEmpty && parents.forall(_.isInstanceOf[ProjectExec])
+    }
+    assert(projectsRows(got.select("value").queryExecution.executedPlan),
+      "batch scan rows must pass through a ProjectExec")
+
+    // micro-batch: the same payload, reordered, through the stream reader
+    val q = spark.readStream.format("graft.sources.rest.RestIntradaySource")
+      .option("resources", (intraday :+ "hrv").mkString(","))
+      .option("start", day).option("end", day).load()
+      .select("time", "value", "resource")
+      .writeStream.format("memory").queryName("rest_h60_stream")
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      val exec = q.asInstanceOf[org.apache.spark.sql.execution.streaming
+        .runtime.StreamingQueryWrapper].streamingQuery.lastExecution
+      assert(projectsRows(exec.executedPlan),
+        "micro-batch scan rows must pass through a ProjectExec")
+    } finally q.stop()
+    sameRows(spark.table("rest_h60_stream"),
+      (intraday :+ "hrv").map(relational(_, Seq(day))).reduce(_ union _)
+        .select("time", "value", "resource"), "micro-batch")
   }
 
   test("S2b: per-resource grain — heart 1sec, others 1min") {
