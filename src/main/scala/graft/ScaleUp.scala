@@ -24,14 +24,7 @@ import org.apache.spark.sql.functions._
 object ScaleUp {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleUp <srcSfDir> <dstDir> [factor]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     run(spark, args(0), args(1),
       if (args.length > 2) args(2).toInt else 10)
     spark.stop()

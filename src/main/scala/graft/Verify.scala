@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
+import GraftSession.jsonStr
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,43 +11,23 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).headOption
       .map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS); read nanos as long once,
-      // session-wide, instead of mutating conf inside table loaders.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // NTZ micros read verbatim as UTC TimestampType, set at session
-      // construction so read semantics never depend on which loader ran
-      // first (r12 advice; Tables.ensureNtzReadAsUtc stays as the
-      // fallback for driver-built sessions).
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // cached (pinFrame'd) builds plan adaptively instead of with
-      // static exchanges/joins — see Bench.scala for the measured
-      // rationale (r20 optimization round)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // per-query wall times → <outDir>/verify_times.json (VERDICT r19
     // #8: the full gate is ~270 queries x 2 scale factors — its cost
     // must stay a managed number, so every dump records where the
     // minutes go; PLANS.md keeps the tail table)
     val times = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_(name)) }
       .foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       times += name -> (System.nanoTime() - t0) / 1e9
       // per-query release (r9): don't let one query's pinned frames
@@ -56,23 +37,15 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/verify_times.json"),
       times.map { case (n, t) => f""""$n":$t%.3f""" }
         .mkString("{", ",", "}"))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // release the terminal pinned frames (d2, d7 — ADVICE r3)
     operators.LlmOps.releaseCaches()
     spark.stop()
+    // the exit code stays 0: each missing output is judged on its own
+    System.err.println(
+      s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")
   }
 }

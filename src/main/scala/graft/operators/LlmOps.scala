@@ -4,6 +4,7 @@ import graft.Checkpoints.SnapOps
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 import graft.Queries.Q
 import graft.Tables._
@@ -257,19 +258,6 @@ object LlmOps {
     p
   }
 
-  /** Round-robin-spread a SCAN-ONLY frame across the session's cores
-    * before fan-out-heavy derivations (guide §2.5: few-split input
-    * ahead of fan-out work — the local single-row-group parquet gives
-    * every scan ONE split, so per-row-expensive derivations like d13's
-    * pre-cap band tables and x14's 5-per-row h60 explode otherwise run
-    * on one core; d13 measured 6.7–12 s single-task stages). No-op
-    * when the scan already has >= defaultParallelism partitions (the
-    * production case: many splits), so it never adds a corpus-wide
-    * shuffle at scale. Only safe on scan-level frames: the partition
-    * probe resolves the physical plan, which for a frame with upstream
-    * exchanges would materialize its query stages. Result-neutral:
-    * every consumer aggregates by key (counts / min-max / register
-    * merges), none is partitioning- or order-sensitive. */
   /** Bytes of CPU-dense scan input one spread partition should carry
     * (guide §2.2: derive partitioning from input size, never a
     * local-core constant). Sized from the r21 A/B pair: at sf0.1
@@ -278,46 +266,55 @@ object LlmOps {
     * NOT spreading serialized the per-row hashing into one scan task
     * (canary-adjusted 2.1× the spread form). 256 KB puts the
     * crossover between those two measured points: ≈2 tasks at sf0.1,
-    * ≈24 at 10×, capped at the session's cores. Env-overridable for
-    * A/B isolation. */
-  private[graft] val SPREAD_TARGET_BYTES =
-    numericKnob(sys.env.get("SPARK_GRAFT_SPREAD_BYTES"), _ > 0)
-      .getOrElse(256L << 10)
+    * ≈24 at 10×, capped at the session's cores. */
+  private[graft] val SPREAD_TARGET_BYTES = 256L << 10
 
-  /** A numeric env knob's value: `None` when unset, not an integer, or
-    * outside `valid`, so a malformed setting falls back to the default
-    * instead of throwing when a query is built. */
-  private[graft] def numericKnob(
-      raw: Option[String], valid: Long => Boolean): Option[Long] =
-    raw.flatMap(_.trim.toLongOption).filter(valid)
-
+  /** Round-robin-spread a SCAN-ONLY frame across the session's cores
+    * before fan-out-heavy derivations (guide §2.5: few-split input
+    * ahead of fan-out work — the local single-row-group parquet gives
+    * every scan ONE split, so per-row-expensive derivations like d13's
+    * pre-cap band tables and x14's 5-per-row h60 explode otherwise run
+    * on one core; d13 measured 6.7–12 s single-task stages).
+    *
+    * The width derives from the scan's size: ceil(bytes /
+    * SPREAD_TARGET_BYTES) clamped to the session's cores, so tiny local
+    * scans stay unspread (r21: the 32-way spread of a 2 k-row scan cost
+    * 14× CPU in tiny-task overhead) while probe-scale scans still fan
+    * their CPU-dense derivations out. No-op when the scan already has
+    * that many partitions (the production case: many splits), so it
+    * never adds a corpus-wide shuffle at scale.
+    *
+    * Only a leaf relation under Project/Filter nodes is probed: the
+    * partition probe resolves the physical plan, which for a frame with
+    * upstream exchanges would materialize its query stages; any other
+    * frame comes back unchanged. Result-neutral: every consumer
+    * aggregates by key (counts / min-max / register merges), none is
+    * partitioning- or order-sensitive. */
   private[graft] def spreadScan(df: DataFrame): DataFrame = {
-    // width is env-tunable for A/B isolation (0 disables; a positive
-    // SPARK_GRAFT_SPREAD forces that exact width); the default derives
-    // the width from the scan's size: ceil(bytes / SPREAD_TARGET_BYTES)
-    // clamped to the session's cores, so tiny local scans stay
-    // unspread (r21: the 32-way spread of a 2 k-row scan cost 14× CPU
-    // in tiny-task overhead) while probe-scale scans still fan their
-    // CPU-dense derivations out. At cluster scale the scan brings
-    // >= cores splits of its own and the helper is a no-op either way.
+    import org.apache.spark.sql.catalyst.plans.logical.{
+      Filter, LeafNode, LogicalPlan, Project}
+    def scanOnly(p: LogicalPlan): Boolean = p match {
+      case Project(_, child) => scanOnly(child)
+      case Filter(_, child) => scanOnly(child)
+      case _: LeafNode => true
+      case _ => false
+    }
+    if (df.isStreaming) return df
+    val plan = df.queryExecution.optimizedPlan
+    if (!scanOnly(plan)) return df
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    val p = numericKnob(sys.env.get("SPARK_GRAFT_SPREAD"),
-        w => w >= 0 && w <= Int.MaxValue).map(_.toInt).getOrElse {
-      val bytes =
-        try BigInt(df.queryExecution.optimizedPlan.stats.sizeInBytes
-          .bigInteger).min(BigInt(Long.MaxValue)).toLong
-        catch { case _: Throwable => 0L }
-      if (bytes <= 0) cores
+    val bytes =
+      try BigInt(plan.stats.sizeInBytes.bigInteger)
+        .min(BigInt(Long.MaxValue)).toLong
+      catch { case NonFatal(_) => 0L }
+    val p = if (bytes <= 0) cores
       else math.min(cores.toLong,
         (bytes + SPREAD_TARGET_BYTES - 1) / SPREAD_TARGET_BYTES).toInt
-    }
-    if (p <= 0) return df
-    // the partition probe is undefined for streaming frames (and
-    // resolves the physical plan for batch ones) — on ANY failure,
-    // return the frame unchanged: the spread is an optimization, never
-    // a semantic need
-    val parts = try df.rdd.getNumPartitions catch { case _: Throwable => p }
-    if (parts >= p || p <= 1) df else df.repartition(p)
+    if (p <= 1) return df
+    // the spread is an optimization, never a semantic need: if the
+    // probe fails, the frame goes on unchanged
+    val parts = try df.rdd.getNumPartitions catch { case NonFatal(_) => p }
+    if (parts >= p) df else df.repartition(p)
   }
 
   /** Like [[pinned]], but for frames whose blocks Dataset.unpersist

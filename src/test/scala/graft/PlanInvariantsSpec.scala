@@ -14,21 +14,12 @@ class PlanInvariantsSpec extends SparkSuite {
   }
 
   /** Every node of `name`'s final adaptive plan after a run, through
-    * its query stages. A TREE, not the plan string: InMemoryTableScan
-    * PRINTS its cached relation's build plan, and a reused exchange
-    * prints the subtree it reuses, but neither executes here — tree
-    * collection sees only the real operators (ADVICE r19/r20). */
+    * its query stages ([[Bench.finalNodes]]: a tree, not the plan
+    * string). */
   private def finalNodes(name: String): Seq[SparkPlan] = {
-    import org.apache.spark.sql.execution.adaptive.{
-      AdaptiveSparkPlanExec, QueryStageExec}
-    def whole(p: SparkPlan): Seq[SparkPlan] = p.collect {
-      case a: AdaptiveSparkPlanExec => whole(a.executedPlan)
-      case s: QueryStageExec => whole(s.plan)
-      case other => Seq(other)
-    }.flatten
     val qe = SparkEntry.queries(name)(spark, sf).queryExecution
     qe.toRdd.count()
-    whole(qe.executedPlan)
+    Bench.finalNodes(qe.executedPlan)
   }
 
   test("s5/a1b/a7: packed-long argmax stays a HashAggregate — no " +

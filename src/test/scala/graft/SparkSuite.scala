@@ -4,35 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session: Spark
-  * startup dominates test wall-clock otherwise). Config mirrors
-  * Verify/Bench: UTC, AQE, nanosAsLong for events.parquet. */
+  * startup dominates test wall-clock otherwise), built by GraftSession
+  * like Verify's and Bench's. */
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   def sf: String = "/root/testdata/sf0.001"
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // NTZ micros read verbatim as UTC TimestampType, set at session
-      // construction so read semantics never depend on which loader ran
-      // first (r12 advice; Tables.ensureNtzReadAsUtc stays as the
-      // fallback for driver-built sessions).
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // cached (pinFrame'd) builds plan adaptively instead of with
-      // static exchanges/joins — see Bench.scala (r20 optimization)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Four cores whatever SPARK_GRAFT_CPUS says, so plan shapes the
+    * specs pin do not move with the machine. */
+  lazy val session: SparkSession = GraftSession(cpus = 4)
 }
