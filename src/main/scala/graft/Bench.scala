@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -26,9 +27,10 @@ import GraftSession.jsonStr
   *  - plan: analysis, optimization and physical planning of that frame;
   *  - exec: `toRdd.count()` of the full plan.
   * A [[PhaseListener]] attributes every Spark job to the phase that
-  * submitted it. Per query, the record also carries the cached RDDs and
-  * bytes still resident after `releaseCaches()`, and operator counts of
-  * the final adaptive plan, whose text goes to one file per query. */
+  * submitted it. Per query, the record also carries the classes Janino
+  * compiled during the pass, the cached RDDs and bytes still resident
+  * after `releaseCaches()`, and operator counts of the final adaptive
+  * plan, whose text goes to one file per query. */
 object Bench {
   /** Timed passes per query; the reported figure is the per-query MEDIAN.
     * r3's single pass drifted ±0.9–3.4 s on untouched queries, which made
@@ -154,9 +156,11 @@ object Bench {
   }
 
   /** One timed pass: the wall seconds of each phase and of the whole
-    * pass, and the counters of the jobs each phase ran. */
+    * pass, the counters of the jobs each phase ran, and the classes
+    * Janino compiled during it (driver and tasks: local mode runs both
+    * in this JVM, and each keys its own codegen cache). */
   private[graft] final case class Pass(phaseS: Map[String, Double],
-      wallS: Double, counters: Map[String, Counters])
+      wallS: Double, counters: Map[String, Counters], compiles: Long)
 
   private def timePass(spark: SparkSession, listener: PhaseListener,
       fn: Query, dir: String): (Pass, SparkPlan) = {
@@ -166,6 +170,7 @@ object Bench {
       val t0 = System.nanoTime()
       try body finally phaseS(name) = (System.nanoTime() - t0) / 1e9
     }
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = System.nanoTime()
     val df = timed("build")(fn(spark, dir))
     val qe = df.queryExecution
@@ -175,7 +180,10 @@ object Bench {
     // so projection-heavy queries would measure only scan+count.
     timed("exec")(qe.toRdd.count())
     val wall = (System.nanoTime() - t0) / 1e9
-    (Pass(phaseS.toMap, wall, listener.take(sc)), qe.executedPlan)
+    val compiles =
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    (Pass(phaseS.toMap, wall, listener.take(sc), compiles),
+      qe.executedPlan)
   }
 
   /** Every node of an executed plan, through its adaptive query stages.
@@ -226,6 +234,7 @@ object Bench {
       (Seq(f""""wall_s":$seconds%.4f""") ++ phases ++ Seq(
         s""""stages":${sum(_.stages)}""",
         s""""tasks":${sum(_.tasks)}""",
+        s""""compiles":${median.compiles}""",
         f""""task_s":${sum(_.taskMs) / 1e3}%.3f""",
         f""""gc_s":${sum(_.gcMs) / 1e3}%.3f""",
         f""""shuffle_read_mb":${sum(_.shuffleRead) / 1e6}%.3f""",

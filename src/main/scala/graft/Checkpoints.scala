@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The lineage-truncation seam for every iterative fixpoint in the
   * engine (connected components' star-contract rounds, PageRank / HITS
@@ -93,4 +94,16 @@ object Checkpoints {
       }
     }
   }
+
+  /** Frees the blocks the snaps under each frame hold. `Dataset.
+    * unpersist` cannot reach them: a snap's rows live in the persisted
+    * RDD its `LogicalRDD` leaf reads, not in the cache manager. A
+    * reliable snap holds no blocks (its files are the cleaner's
+    * concern), so this only drops its registration. Call it once no
+    * consumer will read the frames again. */
+  def release(frames: Seq[DataFrame]): Unit =
+    frames.foreach(_.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    })
 }

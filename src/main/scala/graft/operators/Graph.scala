@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Checkpoints
 import graft.Checkpoints.SnapOps
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
@@ -56,17 +57,19 @@ object Graph {
   //   pr'(v) = (15 * (S div N)) div 100
   //          + (85 * (recv(v) + dang div N)) div 100
   //
-  // Shape at scale: the edge list and out-degrees build once (cached,
-  // eagerly materialized — the a17 lesson: a LAZY persist under AQE's
-  // parallel stages races and recomputes). Each round is ONE union +
-  // groupBy shuffle and ONE checkpoint job: every node's self row
-  // (n, outdeg, previous pr) rides the union beside the edge
-  // contributions, so no join back to the node frame; the dangling sum
-  // for the next round is a Dataset.observe metric of that same job,
-  // fed back as a one-row broadcast relation. The rank frame is
-  // checkpoint-truncated so the two-consumer round (contrib join + self
-  // rows) cannot double the inlined plan per iteration — 2^8 copies
-  // otherwise (the d8/a17 listener-audit trap, memory + VERDICT r13).
+  // Shape at scale: every link is a pure function of its source row,
+  // so no edge frame is built or joined. The rank row carries its
+  // out-links as an array column (`dsts`), and each round is ONE
+  // shuffle and ONE checkpoint job: the contributions are an explode of
+  // `dsts` off the checkpointed rank frame, grouped by target beside
+  // every node's self row (n, outdeg, previous pr), so the grouped row
+  // carries everything the next rank needs without a join back to the
+  // node frame. The dangling sum for the next round is a
+  // Dataset.observe metric of that same job, fed back as a one-row
+  // broadcast relation. The rank frame is checkpoint-truncated because
+  // each round reads it twice (contributions + self rows): untruncated,
+  // the inlined plan doubles per iteration — 2^8 copies (the d8/a17
+  // listener-audit trap).
   // ---------------------------------------------------------------------
   /** (doc_id, n, outdeg) — the synthetic node frame both fixpoints
     * share (n rides along for the teleport arithmetic). */
@@ -74,104 +77,79 @@ object Graph {
     val docs = documents(s, d).select(col("doc_id"))
     docs
       .crossJoin(broadcast(docs.agg(count(lit(1)).as("n"))))
-      .select(col("doc_id"), col("n"),
-        (col("doc_id") % 4).cast("long").as("outdeg"))
+      .select(col("doc_id"), col("n"), g1Outdeg.as("outdeg"))
   }
 
-  /** The deterministic (src, outdeg, dst) edge list over [[nodesOf]] —
-    * ONE definition, shared by g1/g1b (PageRank) and g2 (HITS) so the
-    * two link-analysis fixpoints provably rank the same graph. */
-  private def edgesOf(nodes: DataFrame): DataFrame =
-    nodes
-      .select(col("doc_id"), col("n"), col("outdeg"),
-        explode(array(lit(0L), lit(1L), lit(2L))).as("k"))
-      .filter(col("k") < col("outdeg"))
-      .select(col("doc_id").as("src"), col("outdeg"),
-        ((col("doc_id") *
-          when(col("k") === 0L, 7L).when(col("k") === 1L, 13L)
-            .otherwise(29L) + col("k") + lit(1L)) % col("n")).as("dst"))
+  /** g1's out-degree of node doc_id: 0-3 links, ~1/4 dangling. */
+  private val g1Outdeg = (col("doc_id") % 4).cast("long")
 
-  /** The rank frames r0..r`iters`, each (doc_id, n, outdeg, pr) and
-    * checkpoint-pinned, plus `steps(i - 1)` = round i's L1 step
-    * Σ|pr_i − pr_{i−1}|, read off round i's own checkpoint job. */
+  /** The out-links of node `doc` in an `n`-node graph: the
+    * (doc·p_k + k + 1) % n slots for the `outdeg` lowest k, p = (7, 13,
+    * 29) — ONE definition, shared by the PageRank rounds (as the rank
+    * row's `dsts`) and, through [[edgesOf]], by HITS, personalized
+    * PageRank and the walks, so every link-analysis query ranks the
+    * same graph. */
+  private def linksOf(doc: Column, n: Column, outdeg: Column): Column =
+    slice(array(Seq(7L, 13L, 29L).zipWithIndex.map { case (p, k) =>
+      (doc * p + (k + 1).toLong) % n
+    }: _*), lit(1), outdeg.cast("int"))
+
+  /** g1's out-links over [[nodesOf]]'s row. */
+  private[graft] val g1Links =
+    linksOf(col("doc_id"), col("n"), col("outdeg"))
+
+  /** The deterministic (src, outdeg, dst) edge list over [[nodesOf]]:
+    * an explode of [[g1Links]]. */
+  private def edgesOf(nodes: DataFrame): DataFrame =
+    nodes.select(col("doc_id").as("src"), col("outdeg"),
+      explode(g1Links).as("dst"))
+
+  /** The rank frames r0..r`iters`, each (doc_id, n, outdeg, dsts, pr)
+    * and checkpoint-pinned, plus `steps(i - 1)` = round i's L1 step
+    * Σ|pr_i − pr_{i−1}|, read off round i's own checkpoint job. The
+    * caller frees the frames' blocks with [[graft.Checkpoints.release]]
+    * once nothing reads them. */
   private[graft] final case class PrRounds(
       frames: Seq[DataFrame], steps: Seq[Long])
 
-  /** The r0..r[[PR_ITERS]] rounds of g1's graph (g1's final projection
-    * and g1b's per-round steps both read materialized rounds, never
-    * re-run lineage). */
-  private def prRounds(s: SparkSession, d: String): PrRounds = {
-    val nodes = nodesOf(s, d)
-    val edges = edgesOf(nodes).persist()
-    edges.count() // eager: 8 consuming rounds must not race the cache
-    val rounds = prFixpointRounds(
-      nodes.select(col("doc_id"), col("n"), col("outdeg"),
-        expr(s"$PR_SCALE div n").as("pr")),
-      edges, PR_ITERS)
-    // rounds are materialized (every snap is eager), so the edge
-    // cache has served its 8 consumers and can release now
-    edges.unpersist()
-    rounds
-  }
+  /** The uniform initial rank frame over [[nodesOf]]. */
+  private def prInit(nodes: DataFrame): DataFrame =
+    nodes.select(col("doc_id"), col("n"), col("outdeg"),
+      expr(s"$PR_SCALE div n").as("pr"))
+
+  /** The r0..r`iters` rounds of g1's graph (g1's final projection and
+    * g1b's per-round steps both read materialized rounds, never re-run
+    * lineage). */
+  private[graft] def prRounds(
+      s: SparkSession, d: String, iters: Int = PR_ITERS): PrRounds =
+    prFixpointRounds(prInit(nodesOf(s, d)), g1Links, iters)
 
   /** The PageRank recurrence from ANY initial rank frame (doc_id, n,
-    * outdeg, pr) over ANY (src, outdeg, dst) edge list — split from
-    * [[prRounds]] so g7 can run the same integer-exact rounds cold
-    * (uniform init) and warm (a prior fixpoint's ranks) on a delta'd
-    * graph. Caller persists+materializes the edge frame.
+    * outdeg, pr) over ANY out-link column `links` (an array of target
+    * ids, a function of the node row) — split from [[prRounds]] so g7
+    * can run the same integer-exact rounds cold (uniform init) and warm
+    * (a prior fixpoint's ranks) on a delta'd graph.
     *
-    * Each round is one union + groupBy shuffle and one eager snap:
-    * every node emits a self row (n, outdeg, its previous pr as
-    * `prev`, contribution 0) beside the edge contributions, so the
-    * grouped row carries everything the next rank needs without a join
-    * back to the node frame. The dangling mass Σ_{outdeg=0} pr and the
-    * L1 step are observed on the snap's own job and handed to the
-    * next round as a one-row broadcast RELATION, not a literal: a
-    * per-round literal changes the generated code every round, so
-    * every round would miss the whole-stage codegen cache and pay a
-    * compile on the driver and in every task. */
-  private def prFixpointRounds(
-      init: DataFrame, edges: DataFrame, iters: Int): PrRounds = {
-    val s = init.sparkSession
-    val teleport = expr(s"15L * ($PR_SCALE div n) div 100")
-    val dangOf = coalesce(sum(when(col("outdeg") === 0L, col("pr"))),
-      lit(0L)).as("dang")
-    /** Eager snap of `df` plus the metrics observed on its job. */
-    def snapObserved(
-        df: DataFrame, metrics: Column*): (DataFrame, Map[String, Long]) = {
-      val obs = Observation()
-      val out = df.observe(obs, metrics.head, metrics.tail: _*)
-        .select(col("doc_id"), col("n"), col("outdeg"), col("pr"))
-        .snap()
-      (out, obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] })
-    }
-    var (r, m) = snapObserved(init, dangOf)
+    * Each round is one shuffle and one eager snap: the contributions
+    * `pr div outdeg` are an explode of the rank row's `dsts`, unioned
+    * with every node's self row (n, outdeg, its previous pr as `prev`,
+    * contribution 0) and grouped by target. The next rank row's `dsts`
+    * is `links` again, over the grouped row. The dangling mass
+    * Σ_{outdeg=0} pr and the L1 step are observed on the snap's own job
+    * and handed to the next round as a one-row broadcast RELATION, not
+    * a literal: a per-round literal changes the generated code every
+    * round, so every round would miss the whole-stage codegen cache and
+    * pay a compile on the driver and in every task. */
+  private[graft] def prFixpointRounds(
+      init: DataFrame, links: Column, iters: Int): PrRounds = {
+    val (r0, m0) = snapObserved(init.withColumn("dsts", links), dangOf)
+    var r = r0
+    var m = m0
     val frames = Seq.newBuilder[DataFrame]
     val steps = Seq.newBuilder[Long]
     frames += r
     for (_ <- 1 to iters) {
-      val dang = s.createDataFrame(Seq(Tuple1(m("dang")))).toDF("dang")
-      val contrib = edges
-        .join(r.select(col("doc_id").as("src"), col("pr")), "src")
-        .select(col("dst").as("doc_id"), lit(null).cast("long").as("n"),
-          lit(null).cast("long").as("outdeg"),
-          lit(null).cast("long").as("prev"),
-          expr("pr div outdeg").as("c"))
-      val grouped = r
-        .select(col("doc_id"), col("n"), col("outdeg"),
-          col("pr").as("prev"), lit(0L).as("c"))
-        .unionByName(contrib)
-        .groupBy(col("doc_id"))
-        .agg(max(col("n")).as("n"), max(col("outdeg")).as("outdeg"),
-          max(col("prev")).as("prev"), sum(col("c")).as("recv"))
-        // a contribution to an id outside the node frame has no self
-        // row (the old node-frame left join dropped it the same way)
-        .filter(col("n").isNotNull)
-      val next = grouped.crossJoin(broadcast(dang))
-        .select(col("doc_id"), col("n"), col("outdeg"), col("prev"),
-          (teleport +
-            expr(s"$PR_DAMP_PCT * (recv + dang div n) div 100")).as("pr"))
-      val (rn, mn) = snapObserved(next, dangOf,
+      val (rn, mn) = snapObserved(prRound(r, m("dang"), links), dangOf,
         sum(abs(col("pr") - col("prev"))).as("step"))
       r = rn
       m = mn
@@ -179,6 +157,49 @@ object Graph {
       steps += m("step")
     }
     PrRounds(frames.result(), steps.result())
+  }
+
+  /** A rank frame's dangling mass Σ_{outdeg=0} pr. */
+  private val dangOf = coalesce(sum(when(col("outdeg") === 0L, col("pr"))),
+    lit(0L)).as("dang")
+
+  /** Eager snap of a rank frame plus the metrics observed on its job. */
+  private def snapObserved(
+      df: DataFrame, metrics: Column*): (DataFrame, Map[String, Long]) = {
+    val obs = Observation()
+    val out = df.observe(obs, metrics.head, metrics.tail: _*)
+      .select(col("doc_id"), col("n"), col("outdeg"), col("dsts"),
+        col("pr"))
+      .snap()
+    (out, obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] })
+  }
+
+  /** One PageRank round over rank frame `r` (doc_id, n, outdeg, dsts,
+    * pr) with dangling mass `dang`: the next (doc_id, n, outdeg, dsts,
+    * prev, pr), unsnapped. */
+  private[graft] def prRound(
+      r: DataFrame, dang: Long, links: Column): DataFrame = {
+    val s = r.sparkSession
+    val dangRel = s.createDataFrame(Seq(Tuple1(dang))).toDF("dang")
+    val contrib = r
+      .select(explode(col("dsts")).as("doc_id"),
+        lit(null).cast("long").as("n"),
+        lit(null).cast("long").as("outdeg"),
+        lit(null).cast("long").as("prev"),
+        expr("pr div outdeg").as("c"))
+    r.select(col("doc_id"), col("n"), col("outdeg"), col("pr").as("prev"),
+        lit(0L).as("c"))
+      .unionByName(contrib)
+      .groupBy(col("doc_id"))
+      .agg(max(col("n")).as("n"), max(col("outdeg")).as("outdeg"),
+        max(col("prev")).as("prev"), sum(col("c")).as("recv"))
+      // a contribution to an id outside the node frame has no self row
+      .filter(col("n").isNotNull)
+      .crossJoin(broadcast(dangRel))
+      .select(col("doc_id"), col("n"), col("outdeg"),
+        links.as("dsts"), col("prev"),
+        (expr(s"15L * ($PR_SCALE div n) div 100") +
+          expr(s"$PR_DAMP_PCT * (recv + dang div n) div 100")).as("pr"))
   }
 
   /** The full r0..r[[PR_ITERS]] recurrence as DuckDB CTE text — the
@@ -225,9 +246,15 @@ object Graph {
 
   val g1Pagerank = Q(
     "g1_pagerank",
-    (s, d) =>
-      prRounds(s, d).frames.last
-        .select(col("doc_id"), col("outdeg"), col("pr")),
+    (s, d) => {
+      val frames = prRounds(s, d).frames
+      // the result reads only the last round: free the others now, and
+      // that one at re-entry or releaseCaches()
+      Checkpoints.release(frames.init)
+      LlmOps.pinRelease(s"g1|${s.sparkContext.applicationId}|$d",
+        () => Checkpoints.release(Seq(frames.last)))
+      frames.last.select(col("doc_id"), col("outdeg"), col("pr"))
+    },
     Some(s"""WITH $prDuckCtes
       SELECT doc_id, outdeg, CAST(pr AS BIGINT) AS pr
       FROM r$PR_ITERS"""))
@@ -249,13 +276,17 @@ object Graph {
   // ---------------------------------------------------------------------
   val g1bPagerankConverge = Q(
     "g1b_pagerank_converge",
-    (s, d) =>
-      s.createDataFrame(prRounds(s, d).steps.zipWithIndex.map {
+    (s, d) => {
+      val rounds = prRounds(s, d)
+      // the report reads only the observed steps
+      Checkpoints.release(rounds.frames)
+      s.createDataFrame(rounds.steps.zipWithIndex.map {
         case (step, i) => ((i + 1).toLong, step)
       }).toDF("round", "l1_delta")
         .select(col("round"), col("l1_delta"),
           round(col("l1_delta").cast("double") /
-            lit(PR_SCALE.toDouble), 9).as("delta_frac")),
+            lit(PR_SCALE.toDouble), 9).as("delta_frac"))
+    },
     Some {
       val branches = (1 to PR_ITERS).map { i =>
         s"""SELECT CAST($i AS BIGINT) AS round,
@@ -1098,37 +1129,26 @@ object Graph {
     "g7_delta_pagerank",
     (s, d) => {
       val nodes = nodesOf(s, d)
-      val baseEdges = edgesOf(nodes).persist()
-      baseEdges.count() // eager: rounds must not race the cache
-      val base = prFixpointRounds(
-        nodes.select(col("doc_id"), col("n"), col("outdeg"),
-          expr(s"$PR_SCALE div n").as("pr")),
-        baseEdges, PR_ITERS).frames
+      val base = prFixpointRounds(prInit(nodes), g1Links, PR_ITERS).frames
       val bump = when(col("doc_id") % 50 === 0, lit(1L)).otherwise(lit(0L))
       val mNodes = nodes.select(col("doc_id"), col("n"),
         (col("outdeg") + bump).as("outdeg"))
-      val mEdges = baseEdges
-        .select(col("src"),
-          (col("outdeg") +
-            when(col("src") % 50 === 0, lit(1L)).otherwise(lit(0L)))
-            .as("outdeg"),
-          col("dst"))
-        .unionByName(nodes.filter(col("doc_id") % 50 === 0)
-          .select(col("doc_id").as("src"),
-            (col("outdeg") + lit(1L)).as("outdeg"),
-            ((col("doc_id") * lit(37L) + lit(3L)) % col("n")).as("dst")))
-        .persist()
-      mEdges.count()
-      baseEdges.unpersist() // base rounds are materialized
-      val cold = prFixpointRounds(
-        mNodes.select(col("doc_id"), col("n"), col("outdeg"),
-          expr(s"$PR_SCALE div n").as("pr")),
-        mEdges, PR_ITERS)
+      // g1's links (from the base out-degree) plus the delta link
+      val mLinks = concat(
+        linksOf(col("doc_id"), col("n"), g1Outdeg),
+        slice(array((col("doc_id") * 37L + 3L) % col("n")), lit(1),
+          bump.cast("int")))
+      val cold = prFixpointRounds(prInit(mNodes), mLinks, PR_ITERS)
       val warm = prFixpointRounds(
         mNodes.join(base.last.select(col("doc_id"), col("pr")), "doc_id")
           .select(col("doc_id"), col("n"), col("outdeg"), col("pr")),
-        mEdges, G7_WARM)
-      mEdges.unpersist() // all rounds materialized
+        mLinks, G7_WARM)
+      // the warm seed is materialized; the report reads every cold and
+      // warm round, so those stay until re-entry or releaseCaches()
+      Checkpoints.release(base)
+      val kept = cold.frames ++ warm.frames
+      LlmOps.pinRelease(s"g7|${s.sparkContext.applicationId}|$d",
+        () => Checkpoints.release(kept))
       val fin = cold.frames.last.select(col("doc_id"), col("pr").as("pr_fin"))
       // Tall form: union every checkpointed round once with (phase,
       // round) tags, ONE doc_id join against the cold fixpoint, ONE

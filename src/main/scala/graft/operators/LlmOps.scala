@@ -323,6 +323,14 @@ object LlmOps {
   private val pinnedReleases =
     scala.collection.concurrent.TrieMap.empty[String, () => Unit]
 
+  /** Registers `release` for [[releaseCaches]] under `key`, running the
+    * previous generation's release first — for checkpointed frames a
+    * lazy result reads (the PageRank rounds). */
+  private[graft] def pinRelease(key: String, release: () => Unit): Unit = {
+    pinnedReleases.remove(key).foreach(_.apply())
+    pinnedReleases(key) = release
+  }
+
   /** MinHash signatures over a shingle frame — "permutations" = seeded
     * re-hashes of the shingle's hash (rendered as a decimal string —
     * portable: both engines print a non-negative BIGINT identically);
@@ -818,60 +826,59 @@ object LlmOps {
 
   /** Anchor-blocked candidate pairs with exact intersection/set sizes —
     * the shared generator for d5 (thresholded Jaccard report) and d7
-    * (duplicate-cluster assembly). Columns: id_a, id_b, ni, na, nb.
-    * Per-doc top-ANCHORS by hash: WindowGroupLimit keeps the partial
-    * top-k on the map side, so only ANCHORS rows per doc shuffle; gh is
-    * the per-doc distinct key, so the ordering needs no tie-break. */
+    * (duplicate-cluster assembly). Columns: id_a, id_b, ni, na, nb. */
   private def ngramPairStats(s: SparkSession, d: String): DataFrame =
     ngramPairStatsOf(documents(s, d))
+
+  /** (doc_id, gs): each doc's distinct trigram hashes as one ascending
+    * array — the ONE per-doc gram table behind d5's anchors, set sizes
+    * and intersections. The explicit not-null filters are the ones a
+    * join on doc_id would otherwise infer and push below the grouping
+    * for its own consumer: stated once, every consumer reads the same
+    * aggregate subtree, so AQE reuses its exchange and the scan → split
+    * → explode → hash chain runs once. */
+  private def gramSetsOf(docs: DataFrame): DataFrame =
+    wordNgramHashesOf(docs, 3, "ng|", dedup = false)
+      .filter(col("doc_id").isNotNull && col("gh").isNotNull)
+      .groupBy(col("doc_id"))
+      .agg(array_sort(collect_set(col("gh"))).as("gs"))
+
+  /** Each doc's [[ANCHORS]] smallest-hash trigrams: the first slots of
+    * its sorted gram set, one projection per slot (no second
+    * Generate); a doc with fewer grams fills fewer slots. */
+  private def anchorsOfSets(sets: DataFrame): DataFrame =
+    (1 to ANCHORS).map { k =>
+      sets.select(col("doc_id"),
+          try_element_at(col("gs"), lit(k)).as("anchor"))
+        .filter(col("anchor").isNotNull)
+    }.reduce(_ union _)
 
   /** d5's pre-cap anchor table (per-doc [[ANCHORS]] smallest-hash
     * trigrams) — also the index surface d13_cap_report audits. */
   private[graft] def anchorsOf(docs: DataFrame): DataFrame =
-    anchorsOfGrams(wordNgramHashesOf(docs, 3, "ng|"))
-
-  private def anchorsOfGrams(grams: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("gh").asc)
-    grams
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= ANCHORS)
-      .select(col("doc_id"), col("gh").as("anchor"))
-  }
+    anchorsOfSets(gramSetsOf(docs))
 
   private[graft] def ngramPairStatsOf(docs: DataFrame): DataFrame = {
-    // ONE trigram table feeds the anchors, the set sizes and both
-    // intersection join sides. The explicit not-null filters are the
-    // ones the joins would otherwise infer per consumer: with them
-    // stated once, every consumer's exchange over the distinct grams
-    // is the same subtree, so AQE reuses it and the scan → split →
-    // explode → hash chain runs once instead of once per consumer.
-    val grams = wordNgramHashesOf(docs, 3, "ng|")
-      .filter(col("doc_id").isNotNull && col("gh").isNotNull)
-    val anchors = anchorsOfGrams(grams)
+    val sets = gramSetsOf(docs)
     // hot-anchor guard: one boilerplate gram shared by m docs would
     // otherwise emit m²/2 candidate pairs
-    val kept = capBuckets(anchors, Seq("anchor"))
+    val kept = capBuckets(anchorsOfSets(sets), Seq("anchor"))
     val cand = kept.select(col("doc_id").as("id_a"), col("anchor"))
       .join(kept.select(col("doc_id").as("id_b"), col("anchor")),
         Seq("anchor"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    val sizes = grams.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(grams.select(col("doc_id").as("id_a"), col("gh")),
+    // both sides are sets, so the intersection's size is |A ∩ B|: the
+    // candidate pairs meet the gram table twice, never the gram rows
+    cand
+      .join(sets.select(col("doc_id").as("id_a"), col("gs").as("ga")),
         Seq("id_a"))
-      .join(grams.select(col("doc_id").as("id_b"), col("gh")),
-        Seq("id_b", "gh"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("n_inter"))
-    cand.join(inter, Seq("id_a", "id_b"), "left")
-      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")),
-        Seq("id_a"))
-      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")),
+      .join(sets.select(col("doc_id").as("id_b"), col("gs").as("gb")),
         Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        coalesce(col("n_inter"), lit(0L)).as("ni"),
-        col("na"), col("nb"))
+        size(array_intersect(col("ga"), col("gb"))).cast("long").as("ni"),
+        size(col("ga")).cast("long").as("na"),
+        size(col("gb")).cast("long").as("nb"))
   }
 
   /** DuckDB CTE chain mirroring [[ngramPairStats]] (ends in `pstats`);
@@ -1266,29 +1273,19 @@ object LlmOps {
     * localCheckpoint by default, RELIABLE cluster-storage checkpoint
     * when `spark.graft.checkpointDir` is set (the fault-tolerant mode
     * a real cluster runs) — so every round starts from a leaf plan.
-    * Superseded frontiers' blocks are released by RDD id
-    * (Dataset.unpersist cannot reach checkpoint blocks; in reliable
-    * mode there are no blocks to release and checkpoint FILES are the
-    * cleaner's concern). */
+    * Superseded frontiers' blocks are released with
+    * [[graft.Checkpoints.release]] (Dataset.unpersist cannot reach
+    * checkpoint blocks). */
   private[graft] def starContract(
       edges0: DataFrame, maxRounds: Int): StarCc = {
-    val sc = edges0.sparkSession.sparkContext
-    def release(ids: Set[Int]): Unit = ids.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    // lazy checkpoint + the ids of the blocks it pins (id-diff: single
-    // query execution, nothing else registers RDDs concurrently; the
-    // RDD registers at mark time even though blocks materialize on the
-    // round's convergence count, saving one job per round vs eager)
-    def snap(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.snap(eager = false)
-      (out, sc.getPersistentRDDs.keySet.diff(before).toSet)
-    }
-    var (edges, ids) = snap(edges0.select(col("a"), col("b")).distinct())
+    // lazy checkpoints: the blocks materialize on the round's
+    // convergence count, saving one job per round vs eager
+    var edges = edges0.select(col("a"), col("b")).distinct()
+      .snap(eager = false)
     var converged = false
     var rounds = 0
     while (!converged && rounds < maxRounds) {
-      val (next, nids) = snap(smallStar(largeStar(edges)))
+      val next = smallStar(largeStar(edges)).snap(eager = false)
       // set equality via one full-outer probe: both sides are canonical
       // distinct, so any null-padded row is a symmetric-difference
       // member — ONE count job per round (it also materializes next's
@@ -1296,16 +1293,16 @@ object LlmOps {
       val changed = next.withColumn("l", lit(1))
         .join(edges.withColumn("r", lit(1)), Seq("a", "b"), "full_outer")
         .filter(col("l").isNull || col("r").isNull).count()
-      release(ids)
+      graft.Checkpoints.release(Seq(edges))
       edges = next
-      ids = nids
       converged = changed == 0
       rounds += 1
     }
-    if (!converged) release(ids)
+    val stars = edges
+    if (!converged) graft.Checkpoints.release(Seq(stars))
     require(converged,
       s"d8: star contraction not at fixpoint after $maxRounds rounds")
-    StarCc(edges, rounds, () => release(ids))
+    StarCc(stars, rounds, () => graft.Checkpoints.release(Seq(stars)))
   }
 
   val d8DedupCcStar = Q(

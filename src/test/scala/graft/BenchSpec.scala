@@ -66,6 +66,27 @@ class BenchSpec extends SparkSuite {
     r.nodes.foreach { case (k, v) => assert(rec.get(k).asInt === v, k) }
   }
 
+  test("d5: the record counts the codegen compiles of its pass") {
+    val r = measure("d5_ngram_jaccard",
+      SparkEntry.queries("d5_ngram_jaccard")).get
+    val compiles = json.readTree(r.json).get("compiles")
+    assert(compiles != null && compiles.isIntegralNumber, r.json)
+    assert(compiles.asLong >= 0L && compiles.asLong === r.median.compiles)
+  }
+
+  test("PageRank queries leave no checkpoint resident after release") {
+    val sc = spark.sparkContext
+    Seq("g1_pagerank", "g1b_pagerank_converge", "c11_rank_curation",
+        "g7_delta_pagerank").foreach { name =>
+      operators.LlmOps.releaseCaches()
+      val before = sc.getRDDStorageInfo.map(_.id).toSet
+      val r = measure(name, SparkEntry.queries(name)).get
+      val left = sc.getRDDStorageInfo.map(_.id).toSet -- before
+      assert(left.isEmpty && r.residentRdds <= before.size,
+        s"$name left RDDs $left resident after releaseCaches()")
+    }
+  }
+
   test("jsonStr round-trips a quote, a backslash, a tab and \\u0001") {
     val s = "a\"b\\c\td\u0001e"
     val quoted = GraftSession.jsonStr(s)

@@ -610,6 +610,57 @@ class DedupSpec extends SparkSuite {
       .count() === 0L)
   }
 
+  test("D5: pair stats equal a driver-side recompute, hot anchors " +
+      "past BUCKET_CAP dropped and one at the cap kept") {
+    import operators.LlmOps.{ANCHORS, BUCKET_CAP}
+    // a phrase whose trigram hash sits below 2^44 is, with overwhelming
+    // odds, the smallest gram of any short doc that carries it: plant
+    // one over the cap and one exactly at it
+    def hotPhrase(tag: String): String = Iterator.from(0)
+      .map(j => s"hot $tag $j")
+      .find(p => Portable.h60Jvm("ng|" + p) < (1L << 44)).get
+    val over = hotPhrase("over")
+    val atCap = hotPhrase("cap")
+    val planted =
+      (0 until BUCKET_CAP + 6).map(i =>
+        (1000000L + i, s"$over u$i v$i")) ++
+        (0 until BUCKET_CAP).map(i => (2000000L + i, s"$atCap w$i x$i"))
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+      .unionByName(planted.toDF("doc_id", "text"))
+    // the independent recompute: trigram sets hashed on the JVM, the
+    // ANCHORS smallest per doc, buckets past the cap dropped, all pairs
+    // within the surviving buckets, exact set sizes
+    val sets = docs.collect().flatMap { r =>
+      Option(r.getString(1)).map { text =>
+        val t = text.toLowerCase(java.util.Locale.ROOT).split(" ", -1)
+        r.getLong(0) -> t.sliding(3).filter(_.length == 3)
+          .map(g => Portable.h60Jvm("ng|" + g.mkString(" "))).toSet
+      }
+    }.filter(_._2.nonEmpty).toMap
+    val buckets = sets.toSeq
+      .flatMap { case (id, g) => g.toSeq.sorted.take(ANCHORS).map(_ -> id) }
+      .groupBy(_._1).map { case (a, m) => a -> m.map(_._2) }
+    val overAnchor = Portable.h60Jvm("ng|" + over)
+    val capAnchor = Portable.h60Jvm("ng|" + atCap)
+    assert(buckets(overAnchor).size === BUCKET_CAP + 6)
+    assert(buckets(capAnchor).size === BUCKET_CAP)
+    val want = buckets.values.filter(_.size <= BUCKET_CAP)
+      .flatMap(ids => for (a <- ids; b <- ids if a < b) yield (a, b))
+      .toSet[(Long, Long)]
+      .map { case (a, b) => (a, b, (sets(a) & sets(b)).size.toLong,
+        sets(a).size.toLong, sets(b).size.toLong) }
+    val got = operators.LlmOps.ngramPairStatsOf(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4))).toSeq
+    assert(got.size === got.toSet.size, "a pair is reported twice")
+    assert(got.toSet === want)
+    val capIds = buckets(capAnchor).toSet
+    assert(got.count(p => capIds(p._1) && capIds(p._2)) ===
+      BUCKET_CAP * (BUCKET_CAP - 1) / 2, "the at-cap bucket must survive")
+    assert(!got.exists(p => p._1 >= 1000000L && p._1 < 2000000L),
+      "the over-cap bucket must be dropped")
+  }
+
   test("C5: temperature mix replicates a driver-side gate on planted skew") {
     // strata 512 / 128 / 32 docs: rates 0.25 / 0.5 / 1.0 — the smallest
     // stratum keeps everything, and sampled sizes follow sqrt scaling

@@ -111,6 +111,44 @@ class PlanInvariantsSpec extends SparkSuite {
         "trigram table is being re-derived per consumer")
   }
 
+  test("g1: a PageRank round plans no equi-join — its contributions " +
+      "explode off the rank row") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import operators.Graph
+    val seed = Graph.prRounds(spark, sf, 0).frames
+    try {
+      val qe = Graph.prRound(seed.head, 0L, Graph.g1Links).queryExecution
+      qe.toRdd.count()
+      val nodes = Bench.finalNodes(qe.executedPlan)
+      val equi = nodes.collect {
+        case j: BaseJoinExec if j.leftKeys.nonEmpty => j.nodeName
+      }
+      assert(equi.isEmpty, s"a round joins on keys: $equi")
+      assert(nodes.exists(_.isInstanceOf[GenerateExec]),
+        "the contributions must come from the out-link explode")
+    } finally Checkpoints.release(seed)
+  }
+
+  test("g1b: construction runs at most 3 jobs per round plus its seed") {
+    import operators.Graph
+    val sc = spark.sparkContext
+    val listener = new Bench.PhaseListener
+    sc.addSparkListener(listener)
+    def buildJobs(body: => Unit): Long = {
+      listener.take(sc)
+      listener.phase(sc, "build")(body)
+      listener.take(sc).get("build").fold(0L)(_.jobs)
+    }
+    try {
+      val seed = buildJobs(Checkpoints.release(Graph.prRounds(spark, sf, 0)
+        .frames))
+      val g1b = buildJobs(Graph.g1bPagerankConverge.fn(spark, sf))
+      assert(seed > 0 && g1b - seed <= 3L * Graph.PR_ITERS,
+        s"g1b ran $g1b construction jobs, its seed alone $seed")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("runtime bloom filter reduces the fact side of a selective " +
     "shuffle join (the 100 TB semi-join-reduction posture)") {
     // At fact-fact scale the dim side can't broadcast, but a SELECTIVE
