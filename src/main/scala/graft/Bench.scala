@@ -247,20 +247,20 @@ object Bench {
     }
   }
 
-  /** Times `passes` passes of one query and releases its caches. Fails
-    * with the first non-fatal error a pass throws; a fatal one ends the
-    * run. */
+  /** Times `passes` passes of one query, releasing the session's caches
+    * after each. Fails with the first non-fatal error a pass throws; a
+    * fatal one ends the run. */
   private[graft] def runQuery(spark: SparkSession, listener: PhaseListener,
       name: String, fn: Query, dir: String, passes: Int): Try[Record] = {
-    val ran = Try((1 to passes).map(_ => timePass(spark, listener, fn, dir)))
-    // Release THIS query's pinned frames before the next query runs.
-    // r8 released only once at suite end, so d2's signature tables and
-    // d7's frontiers stayed block-manager residents under all ~50
-    // subsequent queries and the committed record read 2.5× the pin
-    // sum while isolated reruns sat at 1.3× (VERDICT r8 What's-wrong
-    // #2). Outside the timed region: the release is bench hygiene,
-    // not part of any query's cost.
-    operators.LlmOps.releaseCaches()
+    // Release after EVERY pass, outside the timed region: a later pass
+    // would otherwise read an earlier pass's cached frames and time a
+    // cache hit, and the next query would run under this one's blocks
+    // (r8 released once at suite end, and the record read 2.5x the pin
+    // sum while isolated reruns sat at 1.3x, VERDICT r8 What's-wrong #2).
+    val ran = Try((1 to passes).map { _ =>
+      try timePass(spark, listener, fn, dir)
+      finally operators.LlmOps.releaseCaches()
+    })
     if (ran.isFailure) listener.take(spark.sparkContext)
     ran.map { ps =>
       val (median, plan) = ps.sortBy(_._1.wallS).apply(ps.size / 2)

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
@@ -31,7 +33,7 @@ object GraftSession {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       // r20 optimization (guide §2.4/§3.1): cached plans otherwise
-      // BYPASS AQE — every pinFrame'd index/fixpoint build runs with
+      // BYPASS AQE — every persisted index/fixpoint build runs with
       // static shuffle-partition-count exchanges and whatever join
       // strategy the STATIC size estimates pick, and nswBucketFrames'
       // crossJoin(broadcast(count)) poisons those estimates so the
@@ -53,6 +55,12 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // LlmOps.releaseCaches() unpersists every snapped frame, and
+    // RDD.unpersist warns once per locally checkpointed RDD that its
+    // lineage is gone: the intended outcome of a release, one line per
+    // fixpoint round, which would bury every other warning
+    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD",
+      Level.ERROR)
     spark
   }
 

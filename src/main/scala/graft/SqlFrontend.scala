@@ -1934,7 +1934,7 @@ object SqlFrontend {
       // BROADCAST hint makes every hop's adjacency side an IDENTICAL
       // broadcast-exchange subtree, which physical planning collapses
       // to one build + ReusedExchange — the SQL-text analogue of the
-      // DSL's pinned edge index. Rescoring frontier members costs
+      // DSL's persisted edge index. Rescoring frontier members costs
       // B·(deg+1) cosines per probe per hop and changes nothing: sims
       // are deterministic per (probe, vec) pair.
       val hops = (1 to NSW_HOPS).map { k =>

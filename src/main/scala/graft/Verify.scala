@@ -30,8 +30,9 @@ object Verify {
         failed += name
       }
       times += name -> (System.nanoTime() - t0) / 1e9
-      // per-query release (r9): don't let one query's pinned frames
-      // occupy the block manager under the remaining ~100 queries
+      // per-query release (r9): don't let one query's persisted and
+      // snapped frames occupy the block manager under the queries after
+      // it, nor feed their caches
       operators.LlmOps.releaseCaches()
     }
     Files.writeString(Paths.get(s"$outDir/verify_times.json"),
@@ -41,8 +42,6 @@ object Verify {
       .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // release the terminal pinned frames (d2, d7 — ADVICE r3)
-    operators.LlmOps.releaseCaches()
     spark.stop()
     // the exit code stays 0: each missing output is judged on its own
     System.err.println(

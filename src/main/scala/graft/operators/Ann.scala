@@ -1859,7 +1859,7 @@ object Ann {
     * self-loop edge set ([[withSelfLoops]]) makes every hop reference
     * the previous frontier once, so the phase is ONE un-checkpointed
     * linear plan — no per-hop snap, no per-hop query: identical
-    * broadcast subtrees (probes, the pinned edge side of each hop's
+    * broadcast subtrees (probes, the persisted edge side of each hop's
     * lookup) collapse to one build + ReusedExchange under AQE, the
     * discipline sql_a17's WITH-chain proved. */
   private[graft] def beamPhase(
@@ -1997,10 +1997,8 @@ object Ann {
       // discipline with the index written to and served from parquet).
       // The build job is INSIDE the benched region (Bench times fn
       // construction + execution), so its cost is honestly counted;
-      // pinned through LlmOps' registry so Bench/Verify release the
-      // blocks after the query.
-      val edges = LlmOps.pinFrame(
-        s"a17|${s.sparkContext.applicationId}|$d", nswEdges(s, d))
+      // LlmOps.releaseCaches() frees the blocks after the query.
+      val edges = nswEdges(s, d).persist()
       edges.count()
       nswSearchOver(s, d, edges)
     },
@@ -2402,7 +2400,7 @@ object Ann {
   //   - EDGES per layer: nswEdgesFrom over the layer's members — the
   //     corpus-scaled bucket sizing reads the LAYER's count, so every
   //     layer keeps ~NSW_TARGET-sized buckets and per-node degree
-  //     NSW_DEG whatever its population. Built once, pinned eagerly
+  //     NSW_DEG whatever its population. Built once, persisted eagerly
   //     (a17's build-once discipline), tagged elvl.
   //   - SEARCH: entries = NSW_ENTRIES h60-spread members of the
   //     HIGHEST populated layer (lvl DESC ordering — at a scale factor
@@ -2532,7 +2530,7 @@ object Ann {
   /** a19's hierarchical descent over ANY (elvl, v, n) edge source —
     * entry at the top layer's h60-ranked members, HNSW_UHOPS/UBEAM
     * beam per upper layer narrowing to HNSW_DESC seeds, full
-    * NSW_B-beam on layer 0. Shared by a19 (in-memory pinned build) and
+    * NSW_B-beam on layer 0. Shared by a19 (in-memory persisted build) and
     * k8b (parquet round-trip), so both produce identical rows by
     * construction and share one oracle. */
   private[graft] def hnswDescentOver(
@@ -2579,12 +2577,11 @@ object Ann {
   val a19HnswLayers = Q(
     "a19_hnsw_layers",
     (s, d) => {
-      // build once, pin eagerly (a17's discipline — a lazy persist
-      // races AQE's parallel hop stages)
-      val pinnedEdges = LlmOps.pinFrame(
-        s"a19|${s.sparkContext.applicationId}|$d", hnswEdgesAll(s, d))
-      pinnedEdges.count()
-      hnswDescentOver(s, d, pinnedEdges)
+      // build once, persist eagerly (a17's discipline — a lazy
+      // persist races AQE's parallel hop stages)
+      val edges = hnswEdgesAll(s, d).persist()
+      edges.count()
+      hnswDescentOver(s, d, edges)
     },
     Some {
       val layerEdges = (0 to HNSW_MAXL).map(k => hnswLayerEdgesDuck(k))
@@ -2945,10 +2942,8 @@ object Ann {
       val pLabels = labels.filter(col("vec_id") < 8)
         .select(col("vec_id").as("probe_id"),
           col("label").as("p_label"))
-      // a17's graph, a17's pin key — within one session the index is
-      // built once and shared across a17/k8/a25
-      val edges = LlmOps.pinFrame(
-        s"a17|${s.sparkContext.applicationId}|$d", nswEdges(s, d))
+      // a17's graph, built eagerly by this query (a17's discipline)
+      val edges = nswEdges(s, d).persist()
       edges.count()
       val entry = e
         .withColumn("ek", graft.functions.Portable
@@ -3632,14 +3627,13 @@ object Ann {
       val e = embeddings(s, d)
         .select(col("vec_id"), col("embedding").as("emb"))
       val delta = a18DeltaOut(s, d)
-      val alledges = LlmOps.pinFrame(
-        s"a27|${s.sparkContext.applicationId}|$d",
-        nswEdgesFrom(s, a18Standing(e)).select("v", "n")
-          .unionByName(delta.select(col("src").as("v"),
-            col("dst").as("n")))
-          .unionByName(delta.select(col("dst").as("v"),
-            col("src").as("n")))
-          .distinct())
+      val alledges = nswEdgesFrom(s, a18Standing(e)).select("v", "n")
+        .unionByName(delta.select(col("src").as("v"),
+          col("dst").as("n")))
+        .unionByName(delta.select(col("dst").as("v"),
+          col("src").as("n")))
+        .distinct()
+        .persist()
       alledges.count() // eager: the 5 beam hops must not race the cache
       indexHealthOver(s, e, alledges)
     },

@@ -105,10 +105,11 @@ object Graph {
       explode(g1Links).as("dst"))
 
   /** The rank frames r0..r`iters`, each (doc_id, n, outdeg, dsts, pr)
-    * and checkpoint-pinned, plus `steps(i - 1)` = round i's L1 step
+    * and snapped, plus `steps(i - 1)` = round i's L1 step
     * Σ|pr_i − pr_{i−1}|, read off round i's own checkpoint job. The
     * caller frees the frames' blocks with [[graft.Checkpoints.release]]
-    * once nothing reads them. */
+    * once nothing reads them, and leaves the rest to
+    * [[LlmOps.releaseCaches]]. */
   private[graft] final case class PrRounds(
       frames: Seq[DataFrame], steps: Seq[Long])
 
@@ -248,11 +249,9 @@ object Graph {
     "g1_pagerank",
     (s, d) => {
       val frames = prRounds(s, d).frames
-      // the result reads only the last round: free the others now, and
-      // that one at re-entry or releaseCaches()
+      // the result reads only the last round: free the others now; that
+      // one stays until releaseCaches()
       Checkpoints.release(frames.init)
-      LlmOps.pinRelease(s"g1|${s.sparkContext.applicationId}|$d",
-        () => Checkpoints.release(Seq(frames.last)))
       frames.last.select(col("doc_id"), col("outdeg"), col("pr"))
     },
     Some(s"""WITH $prDuckCtes
@@ -428,7 +427,7 @@ object Graph {
   // trap, twice per round here).
   // ---------------------------------------------------------------------
   /** The h0..h[[HITS_ITERS]] hub frames and a1..a[[HITS_ITERS]] auth
-    * frames, every frame localCheckpoint-pinned — shared by g2 (final
+    * frames, every frame snapped — shared by g2 (final
     * scores) and g2b (per-round deltas), the prRounds pattern: extra
     * consumers read materialized rounds, never re-run fixpoint
     * lineage. */
@@ -620,7 +619,7 @@ object Graph {
   // top-1 before the sort shuffle), and the label frame is
   // localCheckpoint-truncated per round.
   // ---------------------------------------------------------------------
-  /** The l0..l[[LPA_ITERS]] label frames, each localCheckpoint-pinned —
+  /** The l0..l[[LPA_ITERS]] label frames, each snapped —
     * shared by g3 (final communities) and g3b (per-round
     * labels-changed counts). */
   private def lpaRounds(s: SparkSession, d: String): Seq[DataFrame] = {
@@ -884,7 +883,7 @@ object Graph {
   // the join and the next checkpoint — under parallel AQE).
   // ---------------------------------------------------------------------
   /** The a0..a[[KCORE_ITERS]] alive frames (plus the shared cached
-    * neighbor list's lifecycle), each localCheckpoint-pinned — shared
+    * neighbor list's lifecycle), each snapped — shared
     * by g4 (final core) and g4b (per-round peel counts). Returns the
     * rounds and the aliveNbrCnt closure over the still-cached nbrs;
     * callers must run their consuming plans before this session drops
@@ -1144,11 +1143,8 @@ object Graph {
           .select(col("doc_id"), col("n"), col("outdeg"), col("pr")),
         mLinks, G7_WARM)
       // the warm seed is materialized; the report reads every cold and
-      // warm round, so those stay until re-entry or releaseCaches()
+      // warm round, so those stay until releaseCaches()
       Checkpoints.release(base)
-      val kept = cold.frames ++ warm.frames
-      LlmOps.pinRelease(s"g7|${s.sparkContext.applicationId}|$d",
-        () => Checkpoints.release(kept))
       val fin = cold.frames.last.select(col("doc_id"), col("pr").as("pr_fin"))
       // Tall form: union every checkpointed round once with (phase,
       // round) tags, ONE doc_id join against the cold fixpoint, ONE

@@ -195,7 +195,7 @@ object LlmOps {
   /** [[capBuckets]] as a groupBy + anti-join of the OVER-cap bucket
     * keys instead of a window count. Two scans of `rows`, but no
     * per-bucket-key sort. Right when `rows` is already a persisted
-    * relation (d2: bands derive from the pinned signature table, so the
+    * relation (d2: bands derive from the persisted signature table, so the
     * second scan is an in-memory re-read); wrong when `rows` is the live
     * end of an expensive unmaterialized chain (d5/d7: the r8 plan audit
     * measured the double evaluation at 1.7× the pin). The r9 same-session
@@ -225,38 +225,24 @@ object LlmOps {
       .agg(count(lit(1)).as("bsz"))
       .filter(col("bsz") > cap)
 
-  /** Pinned frames per (query, app, dataset): re-entry unpersists the
-    * prior run's blocks so repeated invocations in one JVM (RegistrySpec,
-    * bench warmup+measure) don't accumulate block-manager residents
-    * (ADVICE r2). Shared by d2 (signature tables) and d7 (edge list +
-    * per-round label frontiers). */
-  private val pinned =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[DataFrame]]
-
-  /** Unpersist every frame any query still has pinned in this JVM
-    * (ADVICE r3). The re-entry unpin only covers REPEATED runs of the
-    * same (query, app, dataset); without this, the TERMINAL run's
-    * cached relations (d2's signature tables, d7's edge list + final
-    * frontier) stay resident in the block manager for the life of the
-    * application. Bench and Verify call it after their last query;
-    * long-lived sessions embedding the library should too. */
-  def releaseCaches(): Unit = {
-    pinned.keys.toSeq.foreach(k =>
-      pinned.remove(k).foreach(_.foreach(_.unpersist(blocking = false))))
-    pinnedReleases.keys.toSeq.foreach(k =>
-      pinnedReleases.remove(k).foreach(_.apply()))
-  }
-
-  /** Persist `df` and register it for [[releaseCaches]] under `key`,
-    * unpinning any previous generation first (the minhashNearDups
-    * re-entry discipline). For operators outside this object (a17's
-    * edge list) that need the same pin-release lifecycle. */
-  private[graft] def pinFrame(key: String, df: DataFrame): DataFrame = {
-    pinned.remove(key).foreach(_.foreach(_.unpersist(blocking = false)))
-    val p = df.persist()
-    pinned(key) = Seq(p)
-    p
-  }
+  /** Drops everything the active session holds in storage: every
+    * cached Dataset first (`catalog.clearCache()`), then every persisted
+    * RDD of its context, which covers the blocks of every snapped frame
+    * ([[graft.Checkpoints]]) and every persist of every query. Stateless:
+    * no query registers what it holds, so a query run twice in one
+    * session never frees the other run's frames. Bench, Verify and the
+    * benchmark call it after each query (Bench after each pass), so no
+    * query's result or cost depends on what ran before it. Never call it
+    * while a query of the session is still executing or a frame it
+    * returned is still to be read: a persisted frame then recomputes,
+    * and a snapped one fails, its lineage truncated. */
+  def releaseCaches(): Unit =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach { s =>
+        s.catalog.clearCache()
+        s.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = false))
+      }
 
   /** Bytes of CPU-dense scan input one spread partition should carry
     * (guide §2.2: derive partitioning from input size, never a
@@ -317,20 +303,6 @@ object LlmOps {
     if (parts >= p) df else df.repartition(p)
   }
 
-  /** Like [[pinned]], but for frames whose blocks Dataset.unpersist
-    * cannot release (d8's checkpointed star frontier): the value is the
-    * release callback itself. */
-  private val pinnedReleases =
-    scala.collection.concurrent.TrieMap.empty[String, () => Unit]
-
-  /** Registers `release` for [[releaseCaches]] under `key`, running the
-    * previous generation's release first — for checkpointed frames a
-    * lazy result reads (the PageRank rounds). */
-  private[graft] def pinRelease(key: String, release: () => Unit): Unit = {
-    pinnedReleases.remove(key).foreach(_.apply())
-    pinnedReleases(key) = release
-  }
-
   /** MinHash signatures over a shingle frame — "permutations" = seeded
     * re-hashes of the shingle's hash (rendered as a decimal string —
     * portable: both engines print a non-negative BIGINT identically);
@@ -358,12 +330,9 @@ object LlmOps {
 
   /** D2's full MinHash/LSH pipeline over any (doc_id, text) input —
     * split from the Q so DedupSpec can drive it with an adversarial
-    * corpus (hot-bucket fixture). `pinKey` scopes the persisted
-    * signature tables in [[pinned]]. */
-  private[graft] def minhashNearDups(
-      docs: DataFrame, pinKey: String): DataFrame = {
-      pinned.remove(pinKey)
-        .foreach(_.foreach(_.unpersist(blocking = false)))
+    * corpus (hot-bucket fixture). Its persisted shingle, signature and
+    * candidate tables stay until [[releaseCaches]]. */
+  private[graft] def minhashNearDups(docs: DataFrame): DataFrame = {
       // The shingle and signature tables feed MULTIPLE downstream joins
       // (band self-join, intersection probes, size lookups); Catalyst
       // does not reuse the raw subtree across those consumers (verified:
@@ -390,7 +359,6 @@ object LlmOps {
         .filter(col("id_a") < col("id_b"))
         .select("id_a", "id_b").distinct()
         .persist()
-      pinned(pinKey) = Seq(sh, mh, cand)
       val sizes = mh.select(col("doc_id"), col("n"))
       val inter = cand
         .join(sh.select(col("doc_id").as("id_a"), col("sh")), Seq("id_a"))
@@ -450,8 +418,7 @@ object LlmOps {
 
   val d2DedupMinhash = Q(
     "d2_dedup_minhash",
-    (s, d) => minhashNearDups(documents(s, d),
-      s"d2|${s.sparkContext.applicationId}|$d"),
+    (s, d) => minhashNearDups(documents(s, d)),
     Some(s"""WITH $d2BandsDuck,
       bsz AS (
         SELECT band, bkey, count(*) AS c FROM bands GROUP BY 1, 2),
@@ -1121,17 +1088,15 @@ object LlmOps {
 
   /** d7's min-label fixpoint over the near-dup pair graph — the ONE
     * label computation, returning the (v, lbl) labels, read from the
-    * persisted last round pinned under `d7|app|dataset`, and the round
-    * count. Shared by d7's per-doc report, d7b's size
-    * distribution, and the c1b/e4 cluster elections: every consumer
-    * reads the label table itself instead of d7's per-doc report and
-    * immediately re-aggregating/projecting away the cluster_size it
-    * paid a broadcast join for (r9 — VERDICT r8 next-round #4). */
+    * persisted last round (held, with the persisted edge list, until
+    * [[releaseCaches]]), and the round count. Shared by d7's per-doc
+    * report, d7b's size distribution, and the c1b/e4 cluster elections:
+    * every consumer reads the label table itself instead of d7's
+    * per-doc report and immediately re-aggregating/projecting away the
+    * cluster_size it paid a broadcast join for (r9 — VERDICT r8
+    * next-round #4). */
   private[graft] def ccLabelFixpoint(
       s: SparkSession, d: String): CcLabels = {
-      val pinKey = s"d7|${s.sparkContext.applicationId}|$d"
-      pinned.remove(pinKey)
-        .foreach(_.foreach(_.unpersist(blocking = false)))
       val edges = ngramPairStats(s, d)
         .filter(col("ni") * 5 >= col("na") + col("nb") - col("ni"))
         .select(col("id_a"), col("id_b"))
@@ -1178,9 +1143,6 @@ object LlmOps {
         converged = changed == 0
         rounds += 1
       }
-      // pin BEFORE the convergence check: if require throws, re-entry
-      // and releaseCaches() can still find and release the frames
-      pinned(pinKey) = Seq(sym, lbl)
       require(converged,
         s"d7: label propagation not at fixpoint after $CC_MAX_ROUNDS rounds")
       CcLabels(lbl.select(col("v"), col("lbl")), rounds)
@@ -1255,11 +1217,9 @@ object LlmOps {
       .distinct()
   }
 
-  /** Converged star edges + round count + a callback releasing the
-    * final frontier's checkpoint blocks (the caller owns the frame's
-    * lifetime — d8 pins the release until re-entry/releaseCaches). */
-  private[graft] final case class StarCc(
-      stars: DataFrame, rounds: Int, release: () => Unit)
+  /** Converged star edges (a snapped frame, held until
+    * [[releaseCaches]]) + round count. */
+  private[graft] final case class StarCc(stars: DataFrame, rounds: Int)
 
   /** Alternate large-star/small-star to a fixpoint.
     *
@@ -1298,24 +1258,19 @@ object LlmOps {
       converged = changed == 0
       rounds += 1
     }
-    val stars = edges
-    if (!converged) graft.Checkpoints.release(Seq(stars))
     require(converged,
       s"d8: star contraction not at fixpoint after $maxRounds rounds")
-    StarCc(stars, rounds, () => graft.Checkpoints.release(Seq(stars)))
+    StarCc(edges, rounds)
   }
 
   val d8DedupCcStar = Q(
     "d8_dedup_cc_star",
     (s, d) => {
-      val pinKey = s"d8|${s.sparkContext.applicationId}|$d"
-      pinnedReleases.remove(pinKey).foreach(_.apply())
       val pairEdges = ngramPairStats(s, d)
         .filter(col("ni") * 5 >= col("na") + col("nb") - col("ni"))
         .select(col("id_a").as("a"), col("id_b").as("b"))
       val cc = starContract(pairEdges, CC_MAX_ROUNDS)
       val stars = cc.stars
-      pinnedReleases(pinKey) = cc.release
       // at the fixpoint every non-min vertex carries exactly (m, v) and
       // every component min appears as some edge's `a` — so the LABELS
       // read straight off the tiny checkpointed star list (never
@@ -1346,7 +1301,7 @@ object LlmOps {
   val d7bClusterStats = Q(
     "d7b_cluster_stats",
     (s, d) =>
-      // straight off the pinned label table: one hash-agg to sizes, one
+      // straight off the persisted label table: one hash-agg to sizes, one
       // to the distribution — no per-doc broadcast join + distinct of
       // d7's report just to throw the doc ids away (r9)
       ccLabelFixpoint(s, d).labels
@@ -3322,8 +3277,8 @@ object LlmOps {
   /** The t20 learning loop, shared with t21 (which APPLIES the learned
     * rules): one corpus word-freq pass, then [[BPE_ROUNDS]] argmax
     * rounds over the capped vocab. Returns the per-round 1-row best
-    * frames (lhs, rhs, weight) in merge order, each localCheckpoint-
-    * pinned (every best feeds both its caller's output/apply and the
+    * frames (lhs, rhs, weight) in merge order, each snapped (every
+    * best feeds both its caller's output/apply and the
     * next learning round). */
   private def bpeLearnBests(s: SparkSession, d: String): Seq[DataFrame] = {
     import org.apache.spark.sql.expressions.Window
@@ -3452,7 +3407,7 @@ object LlmOps {
   // ---------------------------------------------------------------------
   /** (doc_id, n_tokens) under the LEARNED tokenizer — t21's encode,
     * split out so t9b's packing can budget on REAL token counts.
-    * localCheckpoint-pinned: every caller reads it at least twice. */
+    * snapped: every caller reads it at least twice. */
   private[graft] def bpeTokenCounts(s: SparkSession, d: String)
       : DataFrame = {
     val bests = bpeLearnBests(s, d)
@@ -4319,7 +4274,7 @@ object LlmOps {
   val c1bCurateNeardup = Q(
     "c1b_curate_neardup",
     (s, d) => curateReport(s, d,
-      // non-canonical = label differs from self; read off the pinned
+      // non-canonical = label differs from self; read off the persisted
       // label table, not d7's per-doc report (r9)
       losers = Some(ccLabelFixpoint(s, d).labels
         .filter(col("v") =!= col("lbl"))

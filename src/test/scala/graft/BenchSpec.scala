@@ -1,7 +1,10 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions.{lit, raise_error}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
@@ -74,10 +77,12 @@ class BenchSpec extends SparkSuite {
     assert(compiles.asLong >= 0L && compiles.asLong === r.median.compiles)
   }
 
-  test("PageRank queries leave no checkpoint resident after release") {
+  test("fixpoint queries leave no RDD resident after release") {
     val sc = spark.sparkContext
     Seq("g1_pagerank", "g1b_pagerank_converge", "c11_rank_curation",
-        "g7_delta_pagerank").foreach { name =>
+        "g7_delta_pagerank", "g2b_hits_converge", "g4b_kcore_converge",
+        "g3b_lpa_converge", "t20_bpe_merges", "a23_mmr_rerank")
+        .foreach { name =>
       operators.LlmOps.releaseCaches()
       val before = sc.getRDDStorageInfo.map(_.id).toSet
       val r = measure(name, SparkEntry.queries(name)).get
@@ -85,6 +90,42 @@ class BenchSpec extends SparkSuite {
       assert(left.isEmpty && r.residentRdds <= before.size,
         s"$name left RDDs $left resident after releaseCaches()")
     }
+  }
+
+  test("d7: no pass reads an earlier pass's caches: both passes start " +
+      "with nothing persisted and run the same tasks") {
+    val sc = spark.sparkContext
+    // on the bus queue Bench's listener drains at the end of each pass,
+    // so a read after that drain has seen every task before it
+    val tasks = new AtomicLong
+    val counter = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        tasks.incrementAndGet()
+    }
+    val held = mutable.ArrayBuffer.empty[Int]
+    val marks = mutable.ArrayBuffer.empty[Long]
+    val d7 = SparkEntry.queries("d7_dedup_cc")
+    val listener = new Bench.PhaseListener
+    operators.LlmOps.releaseCaches()
+    sc.addSparkListener(counter)
+    sc.addSparkListener(listener)
+    try {
+      listener.drain(sc)
+      Bench.runQuery(spark, listener, "d7_dedup_cc", (s, d) => {
+        held += sc.getPersistentRDDs.size
+        marks += tasks.get
+        d7(s, d)
+      }, sf, 2).get
+      marks += tasks.get
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.removeSparkListener(counter)
+    }
+    val perPass = marks.toSeq.zip(marks.toSeq.tail).map {
+      case (a, b) => b - a }
+    assert(held === Seq(0, 0), "persisted RDDs when each pass started")
+    assert(perPass.head > 1 && perPass.distinct.size == 1,
+      s"tasks per pass: $perPass")
   }
 
   test("jsonStr round-trips a quote, a backslash, a tab and \\u0001") {

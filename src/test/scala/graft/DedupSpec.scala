@@ -276,7 +276,7 @@ class DedupSpec extends SparkSuite {
       assert(lbls.forall(_._1 === 0L), "all labels must be the global min")
       assert(lbls.map(_._2).toSet === (0 to n).map(v => perm(v.toLong))
         .toSet - 0L)
-    } finally cc.release()
+    } finally Checkpoints.release(Seq(cc.stars))
   }
 
   test("T15: held-out scores match a scalar bigram-LM recompute") {
@@ -593,7 +593,7 @@ class DedupSpec extends SparkSuite {
     d5.unpersist()
 
     // d2 path: banded MinHash candidates end-to-end
-    val d2 = operators.LlmOps.minhashNearDups(docs, "spec|hotbucket")
+    val d2 = operators.LlmOps.minhashNearDups(docs)
     val nD2 = d2.count()
     assert(nD2 < allPairs / 10,
       s"band buckets went quadratic: $nD2 candidate pairs")

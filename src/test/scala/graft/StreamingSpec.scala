@@ -913,8 +913,7 @@ class StreamingSpec extends SparkSuite {
     // batch truth: d2's candidate pairs (band collisions, canonical
     // id_a < id_b), restricted to pairs touching >= 1 arrival
     val isArrival = arrivals.map(_._1).toSet
-    val batchPairs = graft.operators.LlmOps
-      .minhashNearDups(docs, "neardup-parity-test")
+    val batchPairs = graft.operators.LlmOps.minhashNearDups(docs)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .filter { case (a, b) => isArrival(a) || isArrival(b) }.toSet
