@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.OneToOneDependency
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** The lineage-truncation seam for every iterative fixpoint in the
   * engine (connected components' star-contract rounds, PageRank / HITS
@@ -65,45 +68,72 @@ object Checkpoints {
       * [[CONF_DIR]] is set, `localCheckpoint(eager)` otherwise. The
       * eager flag carries the same semantics in both modes (lazy snaps
       * materialize with their first consumer). */
-    def snap(eager: Boolean = true): DataFrame = {
-      val s = df.sparkSession
-      s.conf.getOption(CONF_DIR).filter(_.nonEmpty) match {
-        case Some(dir) =>
-          val sc = s.sparkContext
-          // setCheckpointDir mints a UUID subdir per call — install
-          // once per context; a mid-session conf CHANGE to a different
-          // root intentionally keeps the first installation (documented:
-          // the seam is a deployment setting, not a per-query knob).
-          // If some OTHER code already installed a dir, keep it too —
-          // SparkContext has exactly one, and re-pointing it would
-          // silently relocate that code's checkpoints — but say so:
-          // silence here means checkpoints land outside CONF_DIR and
-          // the operator's storage accounting is wrong.
-          sc.getCheckpointDir match {
-            case None => sc.setCheckpointDir(dir)
-            case Some(existing) if !existing.stripSuffix("/")
-                .startsWith(dir.stripSuffix("/")) =>
-              org.slf4j.LoggerFactory.getLogger("graft.Checkpoints").warn(
-                s"graft.Checkpoints: SparkContext checkpoint dir " +
-                  s"'$existing' was installed before $CONF_DIR='$dir'; " +
-                  s"reliable snaps will use the existing dir")
-            case _ => // already rooted under CONF_DIR
-          }
-          df.checkpoint(eager)
-        case None => df.localCheckpoint(eager)
-      }
-    }
+    def snap(eager: Boolean = true): DataFrame =
+      if (reliable(df.sparkSession)) df.checkpoint(eager)
+      else df.localCheckpoint(eager)
   }
+
+  /** The RDD form of [[SnapOps.snap]], always lazy: marks `rdd` so the
+    * first job over it stores its blocks and truncates its lineage.
+    * Reliable `checkpoint()` when [[CONF_DIR]] is set, over a persisted
+    * copy so the write job reads the stored blocks instead of
+    * recomputing the lineage; `localCheckpoint()` otherwise. */
+  def snap[T](s: SparkSession, rdd: RDD[T]): RDD[T] =
+    if (reliable(s)) {
+      rdd.persist(StorageLevel.MEMORY_AND_DISK).checkpoint()
+      rdd
+    } else rdd.localCheckpoint()
+
+  /** Whether [[CONF_DIR]] is set, installing it as the SparkContext's
+    * checkpoint dir on first use. */
+  private def reliable(s: SparkSession): Boolean =
+    s.conf.getOption(CONF_DIR).filter(_.nonEmpty) match {
+      case Some(dir) =>
+        val sc = s.sparkContext
+        // setCheckpointDir mints a UUID subdir per call — install
+        // once per context; a mid-session conf CHANGE to a different
+        // root intentionally keeps the first installation (documented:
+        // the seam is a deployment setting, not a per-query knob).
+        // If some OTHER code already installed a dir, keep it too —
+        // SparkContext has exactly one, and re-pointing it would
+        // silently relocate that code's checkpoints — but say so:
+        // silence here means checkpoints land outside CONF_DIR and
+        // the operator's storage accounting is wrong.
+        sc.getCheckpointDir match {
+          case None => sc.setCheckpointDir(dir)
+          case Some(existing) if !existing.stripSuffix("/")
+              .startsWith(dir.stripSuffix("/")) =>
+            org.slf4j.LoggerFactory.getLogger("graft.Checkpoints").warn(
+              s"graft.Checkpoints: SparkContext checkpoint dir " +
+                s"'$existing' was installed before $CONF_DIR='$dir'; " +
+                s"reliable snaps will use the existing dir")
+          case _ => // already rooted under CONF_DIR
+        }
+        true
+      case None => false
+    }
 
   /** Frees the blocks the snaps under each frame hold. `Dataset.
     * unpersist` cannot reach them: a snap's rows live in the persisted
-    * RDD its `LogicalRDD` leaf reads, not in the cache manager. A
-    * reliable snap holds no blocks (its files are the cleaner's
-    * concern), so this only drops its registration. Call it once no
-    * consumer will read the frames again. */
+    * RDD its `LogicalRDD` leaf reads, directly (a frame snap) or
+    * through one-to-one maps (a frame over a snapped RDD), not in the
+    * cache manager. A reliable frame snap holds no blocks (its files
+    * are the cleaner's concern), so this only drops its registration.
+    * Call it once no consumer will read the frames again. */
   def release(frames: Seq[DataFrame]): Unit =
     frames.foreach(_.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case r: LogicalRDD =>
+        held(r.rdd).foreach(_.unpersist(blocking = false))
       case _ =>
     })
+
+  /** The first persisted RDD down `rdd`'s chain of one-to-one
+    * dependencies, `rdd` itself included. */
+  @annotation.tailrec
+  private def held(rdd: RDD[_]): Option[RDD[_]] =
+    if (rdd.getStorageLevel != StorageLevel.NONE) Some(rdd)
+    else rdd.dependencies match {
+      case Seq(d: OneToOneDependency[_]) => held(d.rdd)
+      case _ => None
+    }
 }

@@ -58,9 +58,17 @@ object GraftSession {
     // LlmOps.releaseCaches() unpersists every snapped frame, and
     // RDD.unpersist warns once per locally checkpointed RDD that its
     // lineage is gone: the intended outcome of a release, one line per
-    // fixpoint round, which would bury every other warning
-    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD",
-      Level.ERROR)
+    // fixpoint round (a map, or the PageRank seed's partitionBy), which
+    // would bury every other warning
+    Seq("MapPartitionsRDD", "ShuffledRDD").foreach { rdd =>
+      Configurator.setLevel(s"org.apache.spark.rdd.$rdd", Level.ERROR)
+    }
+    // WindowExec warns at every planning pass over a window with no
+    // partitionBy, thousands of lines per run that bury every other
+    // warning; the windows it names are listed in ROADMAP.md as a
+    // scale debt instead
+    Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
     spark
   }
 

@@ -3,8 +3,11 @@ package graft.operators
 import graft.Checkpoints
 import graft.Checkpoints.SnapOps
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Queries.Q
 import graft.Tables._
@@ -59,17 +62,17 @@ object Graph {
   //
   // Shape at scale: every link is a pure function of its source row,
   // so no edge frame is built or joined. The rank row carries its
-  // out-links as an array column (`dsts`), and each round is ONE
-  // shuffle and ONE checkpoint job: the contributions are an explode of
-  // `dsts` off the checkpointed rank frame, grouped by target beside
-  // every node's self row (n, outdeg, previous pr), so the grouped row
-  // carries everything the next rank needs without a join back to the
-  // node frame. The dangling sum for the next round is a
-  // Dataset.observe metric of that same job, fed back as a one-row
-  // broadcast relation. The rank frame is checkpoint-truncated because
-  // each round reads it twice (contributions + self rows): untruncated,
-  // the inlined plan doubles per iteration — 2^8 copies (the d8/a17
-  // listener-audit trap).
+  // out-links (`dsts`), and the loop is the classic co-partitioned
+  // Spark PageRank: the rank rows are hash-partitioned by doc_id ONCE
+  // and stay partitioned, so each round shuffles only the (dst,
+  // pr div outdeg) contribution pairs and reads the rank rows through a
+  // narrow dependency. Each round is ONE job (`runJob`) that both
+  // materializes the round, snapped through the Checkpoints seam, and
+  // returns per-partition partial sums of the next dangling mass and
+  // the L1 step, so only O(partitions) longs reach the driver. The loop
+  // runs no SQL: at sf0.01 a SQL round cost three jobs (the dangling
+  // broadcast, the AQE shuffle stage, the checkpoint) and ~60-70 ms of
+  // driver planning and scheduling each, on rows it barely touches.
   // ---------------------------------------------------------------------
   /** (doc_id, n, outdeg) — the synthetic node frame both fixpoints
     * share (n rides along for the teleport arithmetic). */
@@ -105,11 +108,10 @@ object Graph {
       explode(g1Links).as("dst"))
 
   /** The rank frames r0..r`iters`, each (doc_id, n, outdeg, dsts, pr)
-    * and snapped, plus `steps(i - 1)` = round i's L1 step
-    * Σ|pr_i − pr_{i−1}|, read off round i's own checkpoint job. The
-    * caller frees the frames' blocks with [[graft.Checkpoints.release]]
-    * once nothing reads them, and leaves the rest to
-    * [[LlmOps.releaseCaches]]. */
+    * over a snapped round, plus `steps(i - 1)` = round i's L1 step
+    * Σ|pr_i − pr_{i−1}|, summed on round i's own job. The caller frees
+    * the frames' blocks with [[graft.Checkpoints.release]] once nothing
+    * reads them, and leaves the rest to [[LlmOps.releaseCaches]]. */
   private[graft] final case class PrRounds(
       frames: Seq[DataFrame], steps: Seq[Long])
 
@@ -125,83 +127,98 @@ object Graph {
       s: SparkSession, d: String, iters: Int = PR_ITERS): PrRounds =
     prFixpointRounds(prInit(nodesOf(s, d)), g1Links, iters)
 
+  /** A rank row's value, keyed by doc_id: `prev` is the previous
+    * round's rank (the seed's own). */
+  private[graft] final case class PrRow(
+      n: Long, outdeg: Long, dsts: Array[Long], prev: Long, pr: Long)
+
   /** The PageRank recurrence from ANY initial rank frame (doc_id, n,
     * outdeg, pr) over ANY out-link column `links` (an array of target
     * ids, a function of the node row) — split from [[prRounds]] so g7
     * can run the same integer-exact rounds cold (uniform init) and warm
     * (a prior fixpoint's ranks) on a delta'd graph.
     *
-    * Each round is one shuffle and one eager snap: the contributions
-    * `pr div outdeg` are an explode of the rank row's `dsts`, unioned
-    * with every node's self row (n, outdeg, its previous pr as `prev`,
-    * contribution 0) and grouped by target. The next rank row's `dsts`
-    * is `links` again, over the grouped row. The dangling mass
-    * Σ_{outdeg=0} pr and the L1 step are observed on the snap's own job
-    * and handed to the next round as a one-row broadcast RELATION, not
-    * a literal: a per-round literal changes the generated code every
-    * round, so every round would miss the whole-stage codegen cache and
-    * pay a compile on the driver and in every task. */
+    * The seed is [[rankRows]], each round is [[rankRound]], and each is
+    * settled by ONE job ([[settle]]) that snaps it and sums the next
+    * dangling mass and the L1 step. The dangling mass reaches the next
+    * round as a captured `Long`: the round is plain RDD code, so a
+    * per-round value generates no code and costs no compile. */
   private[graft] def prFixpointRounds(
       init: DataFrame, links: Column, iters: Int): PrRounds = {
-    val (r0, m0) = snapObserved(init.withColumn("dsts", links), dangOf)
-    var r = r0
-    var m = m0
+    val s = init.sparkSession
+    val seed = init.select(col("doc_id"), col("n"), col("outdeg"),
+      links.as("dsts"), col("pr"))
+    var r = rankRows(seed)
+    var dang = settle(s, r)._1
     val frames = Seq.newBuilder[DataFrame]
     val steps = Seq.newBuilder[Long]
-    frames += r
+    frames += frameOf(s, seed.schema, r)
     for (_ <- 1 to iters) {
-      val (rn, mn) = snapObserved(prRound(r, m("dang"), links), dangOf,
-        sum(abs(col("pr") - col("prev"))).as("step"))
-      r = rn
-      m = mn
-      frames += r
-      steps += m("step")
+      r = rankRound(r, dang)
+      val (nextDang, step) = settle(s, r)
+      dang = nextDang
+      frames += frameOf(s, seed.schema, r)
+      steps += step
     }
     PrRounds(frames.result(), steps.result())
   }
 
-  /** A rank frame's dangling mass Σ_{outdeg=0} pr. */
-  private val dangOf = coalesce(sum(when(col("outdeg") === 0L, col("pr"))),
-    lit(0L)).as("dang")
-
-  /** Eager snap of a rank frame plus the metrics observed on its job. */
-  private def snapObserved(
-      df: DataFrame, metrics: Column*): (DataFrame, Map[String, Long]) = {
-    val obs = Observation()
-    val out = df.observe(obs, metrics.head, metrics.tail: _*)
-      .select(col("doc_id"), col("n"), col("outdeg"), col("dsts"),
-        col("pr"))
-      .snap()
-    (out, obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] })
+  /** The rank rows of a (doc_id, n, outdeg, dsts, pr) frame,
+    * hash-partitioned by doc_id into the session's shuffle-partition
+    * count, which every round keeps. */
+  private[graft] def rankRows(seed: DataFrame): RDD[(Long, PrRow)] = {
+    val parts = seed.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    seed.rdd.map { row =>
+      val pr = row.getLong(4)
+      row.getLong(0) ->
+        PrRow(row.getLong(1), row.getLong(2), row.getSeq[Long](3).toArray,
+          pr, pr)
+    }.partitionBy(new HashPartitioner(parts.toInt))
   }
 
-  /** One PageRank round over rank frame `r` (doc_id, n, outdeg, dsts,
-    * pr) with dangling mass `dang`: the next (doc_id, n, outdeg, dsts,
-    * prev, pr), unsnapped. */
-  private[graft] def prRound(
-      r: DataFrame, dang: Long, links: Column): DataFrame = {
-    val s = r.sparkSession
-    val dangRel = s.createDataFrame(Seq(Tuple1(dang))).toDF("dang")
-    val contrib = r
-      .select(explode(col("dsts")).as("doc_id"),
-        lit(null).cast("long").as("n"),
-        lit(null).cast("long").as("outdeg"),
-        lit(null).cast("long").as("prev"),
-        expr("pr div outdeg").as("c"))
-    r.select(col("doc_id"), col("n"), col("outdeg"), col("pr").as("prev"),
-        lit(0L).as("c"))
-      .unionByName(contrib)
-      .groupBy(col("doc_id"))
-      .agg(max(col("n")).as("n"), max(col("outdeg")).as("outdeg"),
-        max(col("prev")).as("prev"), sum(col("c")).as("recv"))
-      // a contribution to an id outside the node frame has no self row
-      .filter(col("n").isNotNull)
-      .crossJoin(broadcast(dangRel))
-      .select(col("doc_id"), col("n"), col("outdeg"),
-        links.as("dsts"), col("prev"),
-        (expr(s"15L * ($PR_SCALE div n) div 100") +
-          expr(s"$PR_DAMP_PCT * (recv + dang div n) div 100")).as("pr"))
+  /** One PageRank round over the partitioned rank rows `r` with
+    * dangling mass `dang`, unmaterialized. The only shuffle is the
+    * contribution pairs' `reduceByKey` into `r`'s partitioner, so the
+    * join with `r` is narrow on both sides; a contribution to an id
+    * with no rank row is dropped. */
+  private[graft] def rankRound(
+      r: RDD[(Long, PrRow)], dang: Long): RDD[(Long, PrRow)] = {
+    val part = r.partitioner.get
+    val recv = r.flatMap { case (_, p) =>
+      p.dsts.iterator.map(_ -> p.pr / p.outdeg)
+    }.reduceByKey(part, _ + _)
+    r.leftOuterJoin(recv, part).mapValues { case (p, c) =>
+      p.copy(prev = p.pr,
+        pr = 15L * (PR_SCALE / p.n) / 100 +
+          PR_DAMP_PCT * (c.getOrElse(0L) + dang / p.n) / 100)
+    }
   }
+
+  /** Snaps round `r` and materializes it in ONE job, which also returns
+    * the round's dangling mass Σ_{outdeg=0} pr and L1 step Σ|pr − prev|
+    * as per-partition partial sums. */
+  private def settle(
+      s: SparkSession, r: RDD[(Long, PrRow)]): (Long, Long) = {
+    val partials = s.sparkContext.runJob(Checkpoints.snap(s, r),
+      (rows: Iterator[(Long, PrRow)]) => {
+        var dang = 0L
+        var step = 0L
+        rows.foreach { case (_, p) =>
+          if (p.outdeg == 0L) dang += p.pr
+          step += math.abs(p.pr - p.prev)
+        }
+        (dang, step)
+      })
+    (partials.map(_._1).sum, partials.map(_._2).sum)
+  }
+
+  /** Round `r` as a (doc_id, n, outdeg, dsts, pr) frame of `schema`. */
+  private def frameOf(
+      s: SparkSession, schema: StructType, r: RDD[(Long, PrRow)])
+      : DataFrame =
+    s.createDataFrame(r.map { case (id, p) =>
+      Row(id, p.n, p.outdeg, p.dsts.toSeq, p.pr)
+    }, schema)
 
   /** The full r0..r[[PR_ITERS]] recurrence as DuckDB CTE text — the
     * shared oracle prefix of g1 (final ranks), g1b (per-round deltas),
@@ -264,10 +281,10 @@ object Graph {
   // round: the L1 rank delta Σ|pr_i − pr_{i−1}| in integer mass units
   // plus its fraction of total mass, so "how converged is 8 rounds"
   // is a driver-visible number (and the dial to raise PR_ITERS on),
-  // not a constant buried in code. Each step is a Dataset.observe
-  // metric of its round's own checkpoint job (the round frame carries
-  // the previous rank as `prev`), so the report costs no job at all:
-  // its 8 rows are a local relation built from the observed steps.
+  // not a constant buried in code. Each step is summed on its round's
+  // own job (the rank row carries the previous rank as `prev`), so the
+  // report costs no job at all: its 8 rows are a local relation built
+  // from the returned steps.
   // GraphSpec recomputes every step with the independent recurrence
   // and requires equality, and asserts the deltas decrease
   // monotonically (damping 0.85 contracts the L1 error geometrically;
@@ -277,7 +294,7 @@ object Graph {
     "g1b_pagerank_converge",
     (s, d) => {
       val rounds = prRounds(s, d)
-      // the report reads only the observed steps
+      // the report reads only the returned steps
       Checkpoints.release(rounds.frames)
       s.createDataFrame(rounds.steps.zipWithIndex.map {
         case (step, i) => ((i + 1).toLong, step)
@@ -1117,8 +1134,8 @@ object Graph {
   // (GraphSpec pins warm₀ ≪ cold₀ and warm₄ ≤ cold₄).
   //
   // Shape at scale: the warm path's cost is G7_WARM rounds instead of
-  // PR_ITERS — each round g1's one union + groupBy shuffle and one
-  // checkpoint job (the d8/a17 lineage discipline); the report joins
+  // PR_ITERS — each round g1's one contribution shuffle and one job
+  // that snaps it (the d8/a17 lineage discipline); the report joins
   // ALREADY-MATERIALIZED rounds. The cold run exists here only to
   // publish the comparison; production runs warm-only.
   // ---------------------------------------------------------------------
@@ -1150,7 +1167,7 @@ object Graph {
       // round) tags, ONE doc_id join against the cold fixpoint, ONE
       // grouped aggregation (the per-round branch form planned ~140
       // sequential AQE stage-jobs — pure scheduler latency). l1_delta
-      // is each round's observed step; round 0 has none, so the left
+      // is each round's returned step; round 0 has none, so the left
       // join leaves it null, as the oracle's round-0 branch does.
       def tallOf(phase: String, rounds: Seq[DataFrame]): DataFrame =
         rounds.zipWithIndex.map { case (r, i) =>

@@ -11,7 +11,8 @@ package graft
 class CheckpointSeamSpec extends SparkSuite {
 
   /** Queries spanning three snap-using fixpoint families: star-contract
-    * CC (LlmOps.starContract), PageRank rounds (Graph.prRounds), and
+    * CC (LlmOps.starContract), PageRank rounds (Graph.prRounds, RDD
+    * rounds snapped with `Checkpoints.snap(session, rdd)`), and
     * the MMR greedy pick loop (Ann.a23 — r21b: the NSW beam descent no
     * longer checkpoints at all, its hops are single-referenced, so a23
     * is the Ann-family snap exemplar now). All run at sf0.001. */
@@ -30,21 +31,25 @@ class CheckpointSeamSpec extends SparkSuite {
     operators.LlmOps.releaseCaches()
     spark.conf.set(Checkpoints.CONF_DIR, dir)
     try {
-      val reliable = fixpoints.map(n => n -> rowsOf(n)).toMap
+      // the seam must have ENGAGED: reliable checkpoints write rdd-*
+      // dirs under <dir>/<uuid>/, wherever the context roots them (the
+      // first installation wins)
+      def rddDirs(): Int = walkCount(spark.sparkContext.getCheckpointDir
+        .fold(dir)(_.stripPrefix("file:")))
+      val reliable = fixpoints.map { n =>
+        val before = rddDirs()
+        val rows = rowsOf(n)
+        n -> (rows, rddDirs() - before)
+      }.toMap
       fixpoints.foreach { n =>
-        assert(reliable(n) === local(n),
+        assert(reliable(n)._1 === local(n),
           s"$n must be mode-invariant under the checkpoint seam")
         assert(local(n).nonEmpty, s"$n fixture must be non-trivial")
       }
-      // the seam must have ENGAGED: reliable checkpoints write rdd-*
-      // part files under <dir>/<uuid>/
-      def walk(f: java.io.File): Seq[java.io.File] =
-        Option(f.listFiles()).toSeq.flatten
-          .flatMap(c => c +: (if (c.isDirectory) walk(c) else Nil))
-      val rddDirs = walk(new java.io.File(dir))
-        .filter(f => f.isDirectory && f.getName.startsWith("rdd-"))
-      assert(rddDirs.nonEmpty,
+      assert(walkCount(dir) > 0,
         "reliable mode must write checkpoint data under the conf'd dir")
+      assert(reliable("g1_pagerank")._2 > 0,
+        "g1's PageRank rounds must snap through the seam")
     } finally {
       spark.conf.unset(Checkpoints.CONF_DIR)
       operators.LlmOps.releaseCaches()

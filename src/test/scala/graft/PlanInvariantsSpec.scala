@@ -111,26 +111,45 @@ class PlanInvariantsSpec extends SparkSuite {
         "trigram table is being re-derived per consumer")
   }
 
-  test("g1: a PageRank round plans no equi-join — its contributions " +
-      "explode off the rank row") {
-    import org.apache.spark.sql.execution.GenerateExec
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
+  test("g1: a PageRank round shuffles only its contribution pairs — " +
+      "the rank rows stay partitioned") {
+    import org.apache.spark.{NarrowDependency, ShuffleDependency}
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.functions.{col, lit}
     import operators.Graph
-    val seed = Graph.prRounds(spark, sf, 0).frames
+    // g1's 20-node graph, snapped like the loop's seed so a round's
+    // lineage starts at the rank rows
+    val n = 20L
+    val init = spark.range(n).select(col("id").as("doc_id"),
+      lit(n).as("n"), (col("id") % 4).as("outdeg"),
+      lit(Graph.PR_SCALE / n).as("pr"))
+    val seed = Checkpoints.snap(spark,
+      Graph.rankRows(init.select(col("doc_id"), col("n"), col("outdeg"),
+        Graph.g1Links.as("dsts"), col("pr"))))
     try {
-      val qe = Graph.prRound(seed.head, 0L, Graph.g1Links).queryExecution
-      qe.toRdd.count()
-      val nodes = Bench.finalNodes(qe.executedPlan)
-      val equi = nodes.collect {
-        case j: BaseJoinExec if j.leftKeys.nonEmpty => j.nodeName
-      }
-      assert(equi.isEmpty, s"a round joins on keys: $equi")
-      assert(nodes.exists(_.isInstanceOf[GenerateExec]),
-        "the contributions must come from the out-link explode")
-    } finally Checkpoints.release(seed)
+      seed.count()
+      val round = Graph.rankRound(seed, 0L)
+      def lineage(r: RDD[_]): Seq[RDD[_]] =
+        r +: r.dependencies.flatMap(d => lineage(d.rdd))
+      val shuffles = lineage(round).flatMap(_.dependencies).collect {
+        case d: ShuffleDependency[_, _, _] => d
+      }.distinct
+      assert(shuffles.size === 1, s"a round runs ${shuffles.size} shuffles")
+      // one map-side record per link (out-degree id % 4 over 20 ids:
+      // 5 × (0 + 1 + 2 + 3) = 30), not one per rank row
+      assert(shuffles.head.rdd.count() === 30L,
+        "the shuffle's map side must be the contribution pairs")
+      def narrowTo(r: RDD[_]): Boolean = (r eq seed) ||
+        r.dependencies.exists {
+          case d: NarrowDependency[_] => narrowTo(d.rdd)
+          case _ => false
+        }
+      assert(narrowTo(round),
+        "the round must read the rank rows through narrow dependencies")
+    } finally seed.unpersist(blocking = false)
   }
 
-  test("g1b: construction runs at most 3 jobs per round plus its seed") {
+  test("g1b: construction runs at most 1 job per round plus its seed") {
     import operators.Graph
     val sc = spark.sparkContext
     val listener = new Bench.PhaseListener
@@ -144,7 +163,7 @@ class PlanInvariantsSpec extends SparkSuite {
       val seed = buildJobs(Checkpoints.release(Graph.prRounds(spark, sf, 0)
         .frames))
       val g1b = buildJobs(Graph.g1bPagerankConverge.fn(spark, sf))
-      assert(seed > 0 && g1b - seed <= 3L * Graph.PR_ITERS,
+      assert(seed > 0 && g1b - seed <= Graph.PR_ITERS,
         s"g1b ran $g1b construction jobs, its seed alone $seed")
     } finally sc.removeSparkListener(listener)
   }

@@ -41,4 +41,21 @@ class SessionCachesSpec extends SparkSuite {
     assert(cached.storageLevel === StorageLevel.NONE)
     assert(sc.getRDDStorageInfo.isEmpty)
   }
+
+  test("g1b frees every PageRank round it builds, g1 all but its last") {
+    import operators.Graph
+    val sc = spark.sparkContext
+    def heldBy(q: Queries.Q): Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet
+      q.fn(spark, sf)
+      sc.getPersistentRDDs.keySet.diff(before).toSet
+    }
+    operators.LlmOps.releaseCaches()
+    try {
+      val g1b = heldBy(Graph.g1bPagerankConverge)
+      assert(g1b.isEmpty, s"g1b holds RDDs $g1b after it returns")
+      val g1 = heldBy(Graph.g1Pagerank)
+      assert(g1.size <= 1, s"g1 holds RDDs $g1 after it returns")
+    } finally operators.LlmOps.releaseCaches()
+  }
 }
