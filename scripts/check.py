@@ -41,19 +41,39 @@ def canon(rows, cols):
     return [cols[i] for i in order], out
 
 
+def memory_limit():
+    """About half of MemTotal, so one heavy oracle fails its own row with
+    an out-of-memory error instead of taking the host down."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return f"{int(line.split()[1]) // 2 // 1024}MB"
+    return "4GB"
+
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{memory_limit()}'")
+    con.execute("SET temp_directory = '/tmp/check_duckdb_spill'")
     for t in TABLES:
         p = Path(sf_dir) / f"{t}.parquet"
         if p.exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.loads((Path(out_dir) / "oracle_sql.json").read_text())
-    n_pass = n_fail = 0
+    # a Verify run on a query subset leaves the other result dirs out
+    subset = (Path(out_dir) / "verify_times.json").exists() and len(
+        json.loads((Path(out_dir) / "verify_times.json").read_text())
+    ) < len(oracle)
+    n_pass = n_fail = n_skip = 0
     for name in sorted(oracle):
         res_dir = Path(out_dir) / name
         if not res_dir.exists():
-            print(f"FAIL {name}: no result dir")
-            n_fail += 1
+            if subset:
+                print(f"SKIP {name}: not in this Verify run")
+                n_skip += 1
+            else:
+                print(f"FAIL {name}: no result dir")
+                n_fail += 1
             continue
         try:
             got = con.execute(
@@ -90,7 +110,7 @@ def main(sf_dir, out_dir):
         else:
             print(f"PASS {name} ({len(g)} rows)")
             n_pass += 1
-    print(f"== {n_pass} pass, {n_fail} fail")
+    print(f"== {n_pass} pass, {n_fail} fail, {n_skip} skip")
     return 1 if n_fail else 0
 
 

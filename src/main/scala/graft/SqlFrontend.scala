@@ -21,9 +21,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The `sql_*` queries below are registered like any operator, but their
   * Spark side is NOTHING BUT SQL TEXT — each shares the oracle of the
   * DSL query it mirrors, so a green CORRECTNESS row proves
-  * SQL text == DataFrame DSL == DuckDB on the same data. sql_f1f2 goes
-  * further: its Spark text IS its oracle text verbatim (one ANSI string
-  * both engines run unchanged).
+  * SQL text == DataFrame DSL == DuckDB on the same data. A twin that
+  * differs from its oracle only in spelling is rendered from the
+  * oracle's own text through [[Dialect]].
   */
 object SqlFrontend {
 
@@ -169,32 +169,11 @@ object SqlFrontend {
     sqlQ("sql_x12_window", t, Some(t))
   }
 
-  // The curriculum planner as SQL text, sharing c10's oracle. Dialect
-  // deltas only where the engines name things differently (size/split
-  // vs len/string_split, div vs //, conv-md5 vs 0x-md5 for the seeded
-  // hash); the BROADCAST hint reproduces the DSL's plan — the stage
-  // map is planner-sized (distinct lengths), the corpus is never
-  // sorted globally.
+  // The curriculum planner as SQL text. The BROADCAST hint reproduces
+  // the DSL's plan: the stage map is planner-sized (distinct lengths),
+  // the corpus is never sorted globally.
   val sqlC10Curriculum: Queries.Q = sqlQ(
-    "sql_c10_curriculum",
-    s"""WITH tok AS (
-        SELECT /*+ BROADCAST(st) */ doc_id, source,
-          CAST(size(split(text, ' ')) AS BIGINT) AS n_tok
-        FROM documents),
-      hist AS (
-        SELECT n_tok, CAST(sum(n_tok) AS BIGINT) AS mass
-        FROM tok GROUP BY n_tok),
-      st AS (
-        SELECT n_tok,
-          least(CAST(3 AS BIGINT),
-            CAST(coalesce(sum(mass) OVER (ORDER BY n_tok
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              * 4 div sum(mass) OVER () AS BIGINT)) AS stage
-        FROM hist)
-      SELECT /*+ BROADCAST(s) */ t.doc_id, t.source, t.n_tok, s.stage,
-        ${functions.Portable.h60Sql("CAST(doc_id AS STRING)", "cur|")}
-          AS ord
-      FROM tok t JOIN st s USING (n_tok)""",
+    "sql_c10_curriculum", operators.LlmOps.c10Sql(Dialect.Spark),
     operators.LlmOps.c10Curriculum.oracle)
 
   // The grouping-sets lattice is the FOURTH verbatim-ANSI query: x13's
@@ -309,91 +288,14 @@ object SqlFrontend {
 
   // BM25 from SQL — t18's whole chain (corpus-derived query workload,
   // round(ln,6) idf, Okapi length-normalized tf, DECIMAL score sums,
-  // per-query top-5) as one Spark SQL string sharing t18's oracle.
-  // Dialect deltas from the oracle text only where the engines differ:
-  // explode/unnest, div-vs-//, D-suffixed double literals (a bare 0.5
-  // is DECIMAL in both dialects — the same trap, solved per-dialect).
+  // per-query top-5) as one Spark SQL string.
   val sqlT18Bm25: Queries.Q = sqlQ(
-    "sql_t18_bm25",
-    """WITH toks AS (
-        SELECT doc_id, explode(split(lower(text), ' ')) AS tok
-        FROM documents),
-      tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
-      dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-      df AS (SELECT tok, count(DISTINCT doc_id) AS df FROM toks
-        GROUP BY 1),
-      stats AS (SELECT count(*) AS n,
-        CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-      qtop AS (SELECT tok, df FROM df WHERE length(tok) >= 5
-        ORDER BY df DESC, tok ASC LIMIT 6),
-      qterms AS (SELECT tok, df,
-          CAST((row_number() OVER (ORDER BY df DESC, tok ASC) - 1) div 2
-            AS BIGINT) AS query_id
-        FROM qtop),
-      scored AS (
-        SELECT q.query_id, t.doc_id,
-          round(round(ln((s.n - q.df + 0.5D) / (q.df + 0.5D) + 1.0D), 6)
-            * (t.tf * 2.2D)
-            / (t.tf + 1.2D * (0.25D + 0.75D * (l.dl / s.avgdl))), 6)
-            AS term_score
-        FROM tf t JOIN qterms q USING (tok)
-        JOIN dl l ON l.doc_id = t.doc_id CROSS JOIN stats s),
-      perdoc AS (
-        SELECT query_id, doc_id,
-          CAST(sum(CAST(term_score AS DECIMAL(20,6))) AS DOUBLE) AS bm25,
-          count(*) AS n_terms
-        FROM scored GROUP BY 1, 2)
-      SELECT query_id, doc_id, bm25, n_terms, CAST(rk AS BIGINT) AS rk
-      FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-          ORDER BY bm25 DESC, doc_id ASC) AS rk FROM perdoc) z
-      WHERE rk <= 5""",
+    "sql_t18_bm25", operators.LlmOps.t18Sql(Dialect.Spark),
     operators.LlmOps.t18Bm25.oracle)
 
-  // URL canonicalization from SQL — d14's synthesis + canonicalization
-  // verbatim (the DSL is already expr()-text; only list-function names
-  // differ from the DuckDB oracle: filter/array_sort/array_join vs
-  // list_filter/list_sort/array_to_string).
+  // URL canonicalization from SQL — d14's synthesis + canonicalization.
   val sqlD14Url: Queries.Q = sqlQ(
-    "sql_d14_url",
-    """WITH raw AS (
-        SELECT doc_id, concat(
-          CASE WHEN doc_id % 4 = 0 THEN 'HTTPS://WWW.'
-               WHEN doc_id % 4 = 1 THEN 'https://'
-               WHEN doc_id % 4 = 2 THEN 'https://www.'
-               ELSE 'HTTPS://' END,
-          'd', CAST(doc_id div 4 AS STRING),
-          CASE WHEN doc_id % 2 = 0 THEN '.Example.COM'
-               ELSE '.example.com' END,
-          CASE WHEN doc_id % 4 = 1 THEN ':443' ELSE '' END,
-          '/docs/', CAST(doc_id div 4 AS STRING),
-          CASE WHEN doc_id % 4 = 2 THEN '/' ELSE '' END,
-          CASE WHEN doc_id % 4 = 0 THEN '?utm_source=feed&b=2&a=1'
-               WHEN doc_id % 4 = 1 THEN '?a=1&b=2'
-               WHEN doc_id % 4 = 2 THEN '?b=2&utm_medium=x&a=1'
-               ELSE '?a=1&utm_campaign=z&b=3' END,
-          CASE WHEN doc_id % 4 = 3 THEN '#section-2' ELSE '' END)
-          AS raw_url
-        FROM documents),
-      canon AS (
-        SELECT doc_id, raw_url, concat(
-          lower(regexp_extract(raw_url, '^([a-zA-Z]+)://', 1)), '://',
-          regexp_replace(regexp_replace(
-            lower(regexp_extract(raw_url, '^[a-zA-Z]+://([^/?#]+)', 1)),
-            '^www[.]', ''), ':443$', ''),
-          regexp_replace(
-            regexp_extract(raw_url, '^[a-zA-Z]+://[^/?#]+([^?#]*)', 1),
-            '/$', ''),
-          CASE WHEN array_join(array_sort(filter(
-              split(regexp_extract(raw_url, '[?]([^#]*)', 1), '&'),
-              p -> substr(p, 1, 4) != 'utm_')), '&') = '' THEN ''
-            ELSE concat('?', array_join(array_sort(filter(
-              split(regexp_extract(raw_url, '[?]([^#]*)', 1), '&'),
-              p -> substr(p, 1, 4) != 'utm_')), '&')) END)
-          AS canon_url
-        FROM raw)
-      SELECT canon_url, count(*) AS n_variants,
-        count(DISTINCT raw_url) AS n_raw, min(doc_id) AS keeper
-      FROM canon GROUP BY canon_url""",
+    "sql_d14_url", operators.LlmOps.d14Sql(Dialect.Spark),
     operators.LlmOps.d14UrlDedup.oracle)
 
   // Cross-document line-level dedup from SQL — d15's postings chain
@@ -595,129 +497,23 @@ object SqlFrontend {
       FROM filled""",
     operators.Windows.w4GapFill.oracle)
 
-  // Conversion funnel from SQL — w5's strict-sequence semantics as one
-  // Spark SQL string sharing w5's oracle. The text IS the oracle's
-  // modulo one dialect delta: epoch microseconds spell unix_micros()
-  // here vs DuckDB's epoch_us(). Same three user-keyed min-aggregates
-  // and monotone-shrinking joins as the DSL; the 3-row rollup window is
-  // planner-sized.
+  // Conversion funnel from SQL — w5's strict-sequence semantics. Same
+  // three user-keyed min-aggregates and monotone-shrinking joins as the
+  // DSL; the 3-row rollup window is planner-sized.
   val sqlW5Funnel: Queries.Q = sqlQ(
-    "sql_w5_funnel",
-    """WITH ev AS (
-        SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-        FROM events),
-      v AS (SELECT user_id, min(ts) AS t1 FROM ev
-            WHERE event_type = 'view' GROUP BY 1),
-      c AS (SELECT e.user_id, v.t1, min(e.ts) AS t2
-            FROM ev e JOIN v ON e.user_id = v.user_id AND e.ts > v.t1
-            WHERE e.event_type = 'click' GROUP BY 1, 2),
-      p AS (SELECT e.user_id, c.t2, min(e.ts) AS t3
-            FROM ev e JOIN c ON e.user_id = c.user_id AND e.ts > c.t2
-            WHERE e.event_type = 'purchase' GROUP BY 1, 2),
-      steps AS (
-        SELECT 1 AS step, 'view' AS step_name,
-          CAST(count(*) AS BIGINT) AS n_users,
-          CAST(NULL AS BIGINT) AS sum_us
-        FROM v
-        UNION ALL
-        SELECT 2, 'click', CAST(count(*) AS BIGINT),
-          CAST(sum(unix_micros(t2) - unix_micros(t1)) AS BIGINT)
-        FROM c
-        UNION ALL
-        SELECT 3, 'purchase', CAST(count(*) AS BIGINT),
-          CAST(sum(unix_micros(t3) - unix_micros(t2)) AS BIGINT)
-        FROM p)
-      SELECT step, step_name, n_users,
-        round(CAST(n_users AS DOUBLE) /
-          lag(n_users) OVER (ORDER BY step), 6) AS conv_from_prev,
-        round(CAST(sum_us AS DOUBLE) / n_users / 1e6, 6)
-          AS avg_secs_to_step
-      FROM steps""",
+    "sql_w5_funnel", operators.Windows.w5Sql(Dialect.Spark),
     operators.Windows.w5Funnel.oracle)
 
-  // Cohort retention from SQL — w6's first-day cohorts sharing w6's
-  // oracle. Dialect deltas: datediff(end, start) vs DuckDB's date
-  // subtraction, and Spark's any_value carries the (functionally
-  // determined) cohort size through the group.
+  // Cohort retention from SQL — w6's first-day cohorts.
   val sqlW6Cohort: Queries.Q = sqlQ(
-    "sql_w6_cohort",
-    """WITH days AS (
-        SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE)
-          AS day
-        FROM events),
-      f AS (SELECT user_id, min(day) AS cohort_day FROM days GROUP BY 1),
-      cs AS (SELECT cohort_day, CAST(count(*) AS BIGINT) AS n_cohort
-             FROM f GROUP BY 1)
-      SELECT f.cohort_day,
-        CAST(datediff(d.day, f.cohort_day) AS BIGINT) AS offset_days,
-        CAST(count(*) AS BIGINT) AS n_active,
-        any_value(cs.n_cohort) AS n_cohort,
-        round(CAST(count(*) AS DOUBLE) / any_value(cs.n_cohort), 6)
-          AS retention
-      FROM days d
-      JOIN f ON f.user_id = d.user_id
-      JOIN cs ON cs.cohort_day = f.cohort_day
-      GROUP BY 1, 2""",
+    "sql_w6_cohort", operators.Windows.w6Sql(Dialect.Spark),
     operators.Windows.w6Cohort.oracle)
 
   // The data-quality suite from SQL — x16's seven contracts as one
-  // Spark SQL string sharing x16's oracle; the only dialect delta is
-  // multi-column COUNT(DISTINCT a, b) vs DuckDB's tuple spelling
-  // COUNT(DISTINCT (a, b)). This is the form a scheduler actually
-  // runs: one SQL statement, gate on bool_and(passed).
+  // Spark SQL string. This is the form a scheduler actually runs: one
+  // SQL statement, gate on bool_and(passed).
   val sqlX16DataQuality: Queries.Q = sqlQ(
-    "sql_x16_data_quality",
-    """WITH li AS (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-          CAST(count(DISTINCT l_orderkey, l_linenumber) AS BIGINT)
-            AS nd,
-          CAST(count(CASE WHEN l_quantity < 1 OR l_quantity > 50
-            THEN 1 END) AS BIGINT) AS v_range
-        FROM lineitem),
-      fk AS (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-          CAST(count(CASE WHEN o.o_orderkey IS NULL THEN 1 END)
-            AS BIGINT) AS v
-        FROM lineitem l LEFT JOIN
-          (SELECT DISTINCT o_orderkey FROM orders) o
-          ON l.l_orderkey = o.o_orderkey),
-      od AS (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-          CAST(count(CASE WHEN o_orderdate IS NULL THEN 1 END)
-            AS BIGINT) AS v_null,
-          CAST(count(CASE WHEN o_totalprice < 0 THEN 1 END) AS BIGINT)
-            AS v_neg,
-          CAST(count(CASE WHEN o_orderstatus NOT IN ('O', 'F', 'P')
-            THEN 1 END) AS BIGINT) AS v_dom
-        FROM orders),
-      evc AS (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-          CAST(count(CASE WHEN CAST(ts AS TIMESTAMP) >
-            TIMESTAMP '2030-01-01 00:00:00' THEN 1 END) AS BIGINT) AS v
-        FROM events),
-      checks AS (
-        SELECT 'pk_unique' AS check_name,
-          'lineitem(l_orderkey,l_linenumber)' AS target,
-          n AS n_checked, n - nd AS n_violations FROM li
-        UNION ALL
-        SELECT 'value_range', 'lineitem.l_quantity in [1,50]', n,
-          v_range FROM li
-        UNION ALL
-        SELECT 'fk_exists', 'lineitem.l_orderkey -> orders', n, v
-        FROM fk
-        UNION ALL
-        SELECT 'not_null', 'orders.o_orderdate', n, v_null FROM od
-        UNION ALL
-        SELECT 'value_range', 'orders.o_totalprice >= 0', n, v_neg
-        FROM od
-        UNION ALL
-        SELECT 'accepted_values', 'orders.o_orderstatus in (O,F,P)', n,
-          v_dom FROM od
-        UNION ALL
-        SELECT 'no_future_ts', 'events.ts < 2030-01-01', n, v FROM evc)
-      SELECT check_name, target, n_checked, n_violations,
-        n_violations = 0 AS passed
-      FROM checks""",
+    "sql_x16_data_quality", operators.Extended.x16Sql(Dialect.Spark),
     operators.Extended.x16DataQuality.oracle)
 
   // Multimodal metadata from SQL — m1's typed projection (payload hex,
@@ -834,105 +630,23 @@ object SqlFrontend {
     operators.Ann.a31MarginMining.oracle)
 
   // Incremental quantile maintenance from SQL — x18's mergeable
-  // bottom-K chain sharing its oracle; dialect deltas are only the
-  // hash spelling and div vs //. Both rank filters compile to
-  // WindowGroupLimit exactly as the DSL's samples do.
+  // bottom-K chain. Both rank filters compile to WindowGroupLimit
+  // exactly as the DSL's samples do.
   val sqlX18Quantiles: Queries.Q = sqlQ(
-    "sql_x18_quantiles", {
-      import graft.functions.Portable.h60Sql
-      val hk = h60Sql("concat_ws('|', l_orderkey, l_linenumber)",
-        "x18|")
-      def samp(name: String, src: String) = s"""$name AS (
-        SELECT flag, ok, ln, v, hk FROM (
-          SELECT *, row_number() OVER (PARTITION BY flag
-            ORDER BY hk ASC, v ASC, ok ASC, ln ASC) AS rs
-          FROM $src) t
-        WHERE rs <= 64)"""
-      def quant(name: String, src: String, tag: String) =
-        s"""$name AS (
-        SELECT flag,
-          max(CASE WHEN rv = (n + 1) div 2 THEN v END) AS p50_$tag,
-          max(CASE WHEN rv = (9 * n + 9) div 10 THEN v END)
-            AS p90_$tag
-        FROM (
-          SELECT flag, v,
-            row_number() OVER (PARTITION BY flag
-              ORDER BY v ASC, hk ASC) AS rv,
-            count(*) OVER (PARTITION BY flag) AS n
-          FROM $src) t
-        GROUP BY 1)"""
-      s"""WITH li AS (
-        SELECT l_returnflag AS flag, l_orderkey AS ok,
-          l_linenumber AS ln, l_extendedprice AS v, $hk AS hk
-        FROM lineitem),
-      standing AS (SELECT * FROM li WHERE ok % 4 <> 0),
-      batch AS (SELECT * FROM li WHERE ok % 4 = 0),
-      ${samp("ss", "standing")},
-      ${samp("sb", "batch")},
-      ${samp("sm",
-        "(SELECT * FROM ss UNION ALL SELECT * FROM sb) u")},
-      ${quant("qs", "ss", "standing")},
-      ${quant("qb", "sb", "batch")},
-      ${quant("qm", "sm", "merged")},
-      nr AS (
-        SELECT flag,
-          CAST(count(CASE WHEN ok % 4 <> 0 THEN 1 END) AS BIGINT)
-            AS n_standing,
-          CAST(count(CASE WHEN ok % 4 = 0 THEN 1 END) AS BIGINT)
-            AS n_batch
-        FROM li GROUP BY 1)
-      SELECT qs.flag AS l_returnflag, nr.n_standing, nr.n_batch,
-        qs.p50_standing, qs.p90_standing, qb.p50_batch, qb.p90_batch,
-        qm.p50_merged, qm.p90_merged
-      FROM qs JOIN qb USING (flag) JOIN qm USING (flag)
-      JOIN nr USING (flag)"""
-    },
+    "sql_x18_quantiles", operators.Extended.x18Sql(Dialect.Spark),
     operators.Extended.x18IncrementalQuantiles.oracle)
 
-  // Touch attribution from SQL — w7's two attribution models sharing
-  // w7's oracle; the one dialect delta is unix_micros vs epoch_us, and
-  // Spark's IGNORE NULLS spelling sits after the argument list exactly
-  // as DuckDB's does here.
+  // Touch attribution from SQL — w7's two attribution models.
   val sqlW7Attribution: Queries.Q = sqlQ(
-    "sql_w7_attribution",
-    """WITH ev AS (
-        SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts,
-          event_id, value
-        FROM events),
-      run AS (
-        SELECT *,
-          last_value(CASE WHEN event_type IN ('view', 'click')
-              THEN event_type END) IGNORE NULLS OVER w AS lt,
-          last_value(CASE WHEN event_type IN ('view', 'click')
-              THEN ts END) IGNORE NULLS OVER w AS lt_ts,
-          first_value(CASE WHEN event_type IN ('view', 'click')
-              THEN event_type END) IGNORE NULLS OVER w AS ft
-        FROM ev
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-          ROWS UNBOUNDED PRECEDING)),
-      att AS (
-        SELECT value,
-          CASE WHEN lt IS NOT NULL
-                 AND unix_micros(ts) - unix_micros(lt_ts)
-                   <= 604800000000
-               THEN lt ELSE 'none' END AS last_touch,
-          coalesce(ft, 'none') AS first_touch
-        FROM run WHERE event_type = 'purchase')
-      SELECT 'last_touch' AS model, last_touch AS channel,
-        CAST(count(*) AS BIGINT) AS n_purchases,
-        round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2)
-          AS revenue
-      FROM att GROUP BY 2
-      UNION ALL
-      SELECT 'first_touch', first_touch, CAST(count(*) AS BIGINT),
-        round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2)
-      FROM att GROUP BY 2""",
+    "sql_w7_attribution", operators.Windows.w7Sql(Dialect.Spark),
     operators.Windows.w7Attribution.oracle)
 
   // Equi-height histograms from SQL — x15's fixed-size hash-ranked
-  // sample + ntile cut sharing x15's oracle; the only dialect delta is
-  // the portable-hash spelling (conv-md5 here, 0x-md5 in DuckDB). Both
-  // rank filters compile to WindowGroupLimit exactly as the DSL's.
+  // sample + ntile cut. Not rendered from the oracle: it carries n_rows
+  // through the sample (first(n_rows)) where the oracle cross-joins nr
+  // at the end, and keys the hash with concat_ws, so its plan is its
+  // own. Both rank filters compile to WindowGroupLimit exactly as the
+  // DSL's.
   val sqlX15Histogram: Queries.Q = {
     import graft.functions.Portable.h60Sql
     import operators.Extended.{HIST_SAMPLE, HIST_BINS, histThreshSql}
@@ -1297,186 +1011,37 @@ object SqlFrontend {
     },
     operators.Graph.g6Ppr.oracle)
 
-  // HITS from SQL — g2's strictly linear chain in Spark dialect: each
-  // iterated score frame is referenced exactly once (raw sums via the
-  // edge join, normalization via an unpartitioned window total over
-  // the null-filled node frame); only the LEAF edges/nodes CTEs are
-  // multiply referenced. Dialect deltas from the shared oracle: div vs
-  // //, LATERAL VIEW explode vs unnest.
+  // HITS from SQL — g2's strictly linear chain: each iterated score
+  // frame is referenced exactly once (raw sums via the edge join,
+  // normalization via an unpartitioned window total over the
+  // null-filled node frame); only the LEAF edges/nodes CTEs are
+  // multiply referenced.
   val sqlG2Hits: Queries.Q = sqlQ(
-    "sql_g2_hits", {
-      import operators.Graph.{HITS_ITERS, HITS_NN, HITS_ND, PR_SCALE}
-      def norm(i: Int, frm: String, key: String, score: String,
-          prev: String, prevCol: String): String =
-        s"""${frm}r$i AS (
-          SELECT e.$key AS doc_id, CAST(sum(p.$prevCol) AS BIGINT) AS s
-          FROM edges e JOIN $prev p
-            ON p.doc_id = e.${if (key == "dst") "src" else "dst"}
-          GROUP BY e.$key),
-        $frm$i AS (
-          SELECT doc_id,
-            CAST(coalesce(s, 0L) * $HITS_NN div
-              greatest(1L, sum(coalesce(s, 0L)) OVER () div $HITS_ND)
-              AS BIGINT) AS $score
-          FROM (SELECT n.doc_id, r.s
-                FROM nodes n LEFT JOIN ${frm}r$i r
-                  ON r.doc_id = n.doc_id) z)"""
-      val rounds = (1 to HITS_ITERS).map { i =>
-        val hPrev = if (i == 1) "h0" else s"h${i - 1}"
-        norm(i, "a", "dst", "auth", hPrev, "hub") + ",\n      " +
-          norm(i, "h", "src", "hub", s"a$i", "auth")
-      }.mkString(",\n      ")
-      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-      nodes AS (
-        SELECT doc_id, nn.n, CAST(doc_id % 4 AS BIGINT) AS outdeg
-        FROM documents CROSS JOIN nn),
-      edges AS (
-        SELECT doc_id AS src, outdeg,
-          (doc_id * (CASE WHEN k = 0 THEN 7 WHEN k = 1 THEN 13
-            ELSE 29 END) + k + 1) % n AS dst
-        FROM nodes LATERAL VIEW explode(array(0L, 1L, 2L)) t AS k
-        WHERE k < outdeg),
-      h0 AS (SELECT doc_id, $PR_SCALE div n AS hub FROM nodes),
-      $rounds
-      SELECT h.doc_id, h.hub, a.auth
-      FROM h$HITS_ITERS h JOIN a$HITS_ITERS a ON a.doc_id = h.doc_id"""
-    },
+    "sql_g2_hits", operators.Graph.g2Sql(Dialect.Spark),
     operators.Graph.g2Hits.oracle)
 
-  // Label propagation from SQL — g3's unrolled synchronous rounds in
-  // Spark dialect. The chain is strictly linear per round (votes →
-  // rank-1 winner, each referencing only the previous label frame);
-  // nbrs/edges/nodes are the only multiply-referenced CTEs and they
-  // are leaves. Dialect delta from the shared oracle: LATERAL VIEW
-  // explode vs unnest.
+  // Label propagation from SQL — g3's unrolled synchronous rounds. The
+  // chain is strictly linear per round (votes → rank-1 winner, each
+  // referencing only the previous label frame); nbrs/edges/nodes are
+  // the only multiply-referenced CTEs and they are leaves.
   val sqlG3LabelProp: Queries.Q = sqlQ(
-    "sql_g3_label_prop", {
-      import operators.Graph.LPA_ITERS
-      val rounds = (1 to LPA_ITERS).map { i =>
-        s"""c$i AS (
-          SELECT b.node, l.lbl, count(*) AS cnt
-          FROM nbrs b JOIN l${i - 1} l ON l.doc_id = b.nbr
-          GROUP BY b.node, l.lbl),
-        l$i AS (
-          SELECT node AS doc_id, lbl FROM (
-            SELECT node, lbl, row_number() OVER (
-              PARTITION BY node ORDER BY cnt DESC, lbl ASC) AS rn
-            FROM c$i) z
-          WHERE rn = 1)"""
-      }.mkString(",\n      ")
-      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-      nodes AS (
-        SELECT doc_id, nn.n, CAST(doc_id % 4 AS BIGINT) AS outdeg
-        FROM documents CROSS JOIN nn),
-      edges AS (
-        SELECT doc_id AS src, outdeg,
-          (doc_id * (CASE WHEN k = 0 THEN 7 WHEN k = 1 THEN 13
-            ELSE 29 END) + k + 1) % n AS dst
-        FROM nodes LATERAL VIEW explode(array(0L, 1L, 2L)) t AS k
-        WHERE k < outdeg),
-      nbrs AS (
-        SELECT src AS node, dst AS nbr FROM edges
-        UNION ALL SELECT dst AS node, src AS nbr FROM edges
-        UNION ALL SELECT doc_id AS node, doc_id AS nbr FROM nodes),
-      l0 AS (SELECT doc_id, doc_id AS lbl FROM nodes),
-      $rounds
-      SELECT l.doc_id, l.lbl AS community, s.csize
-      FROM l$LPA_ITERS l
-      JOIN (SELECT lbl, count(*) AS csize
-            FROM l$LPA_ITERS GROUP BY lbl) s ON s.lbl = l.lbl"""
-    },
+    "sql_g3_label_prop", operators.Graph.g3Sql(Dialect.Spark),
     operators.Graph.g3LabelProp.oracle)
 
   // k-core from SQL — g4's strictly-linear peeling (the redundant-
   // membership lemma in Graph.scala makes each round reference only
   // the previous alive frame once; only the final report doubles the
-  // chain, a constant). Dialect delta from the shared oracle: LATERAL
-  // VIEW explode vs unnest.
+  // chain, a constant).
   val sqlG4Kcore: Queries.Q = sqlQ(
-    "sql_g4_kcore", {
-      import operators.Graph.{KCORE_ITERS, KCORE_K}
-      val rounds = (1 to KCORE_ITERS).map { i =>
-        s"""d$i AS (
-          SELECT b.node, CAST(count(*) AS BIGINT) AS deg
-          FROM unbrs b
-          JOIN a${i - 1} x ON x.doc_id = b.nbr
-          GROUP BY b.node),
-        a$i AS (SELECT node AS doc_id FROM d$i WHERE deg >= $KCORE_K)"""
-      }.mkString(",\n      ")
-      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-      nodes AS (
-        SELECT doc_id, nn.n, CAST(doc_id % 4 AS BIGINT) AS outdeg
-        FROM documents CROSS JOIN nn),
-      edges AS (
-        SELECT doc_id AS src, outdeg,
-          (doc_id * (CASE WHEN k = 0 THEN 7 WHEN k = 1 THEN 13
-            ELSE 29 END) + k + 1) % n AS dst
-        FROM nodes LATERAL VIEW explode(array(0L, 1L, 2L)) t AS k
-        WHERE k < outdeg),
-      ${operators.Graph.undNbrsCtesSpark},
-      a0 AS (SELECT doc_id FROM nodes),
-      $rounds
-      SELECT d.node AS doc_id, d.deg AS core_deg
-      FROM (SELECT b.node, CAST(count(*) AS BIGINT) AS deg
-            FROM unbrs b
-            JOIN a$KCORE_ITERS x ON x.doc_id = b.nbr
-            GROUP BY b.node) d
-      WHERE EXISTS (SELECT 1 FROM a$KCORE_ITERS y
-                    WHERE y.doc_id = d.node)"""
-    },
+    "sql_g4_kcore", operators.Graph.g4Sql(Dialect.Spark),
     operators.Graph.g4Kcore.oracle)
 
   // Triangle counting from SQL — g5's degree-oriented wedge closure,
   // one-shot (no iteration, so no inlining hazard; oriented is the
   // only multiply-referenced non-leaf CTE and the plan reuses its
-  // exchange). Dialect delta: LATERAL VIEW explode vs unnest.
+  // exchange).
   val sqlG5Triangles: Queries.Q = sqlQ(
-    "sql_g5_triangles",
-    s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-      nodes AS (
-        SELECT doc_id, nn.n, CAST(doc_id % 4 AS BIGINT) AS outdeg
-        FROM documents CROSS JOIN nn),
-      edges AS (
-        SELECT doc_id AS src, outdeg,
-          (doc_id * (CASE WHEN k = 0 THEN 7 WHEN k = 1 THEN 13
-            ELSE 29 END) + k + 1) % n AS dst
-        FROM nodes LATERAL VIEW explode(array(0L, 1L, 2L)) t AS k
-        WHERE k < outdeg),
-      ${operators.Graph.denseUndCte(
-        graft.functions.Portable.h60Sql("doc_id", "g4f"),
-        " LATERAL VIEW explode(array(1L, 2L, 3L)) t AS j",
-        " LATERAL VIEW explode(array(0L, 1L, 2L)) t AS j")},
-      deg AS (
-        SELECT x, CAST(count(*) AS BIGINT) AS deg
-        FROM (SELECT u AS x FROM und UNION ALL SELECT v AS x FROM und) z
-        GROUP BY x),
-      oriented AS (
-        SELECT CASE WHEN du < dv OR (du = dv AND u < v)
-                 THEN u ELSE v END AS a,
-               CASE WHEN du < dv OR (du = dv AND u < v)
-                 THEN v ELSE u END AS b,
-               CASE WHEN du < dv OR (du = dv AND u < v)
-                 THEN dv ELSE du END AS db
-        FROM (SELECT e.u, e.v, x.deg AS du, y.deg AS dv
-              FROM und e JOIN deg x ON x.x = e.u
-              JOIN deg y ON y.x = e.v) z),
-      wedges AS (
-        SELECT e1.a AS w0, e1.b AS w1, e2.b AS w2
-        FROM oriented e1 JOIN oriented e2 ON e1.a = e2.a
-        WHERE e1.db < e2.db OR (e1.db = e2.db AND e1.b < e2.b)),
-      tris AS (
-        SELECT w.w0, w.w1, w.w2 FROM wedges w
-        WHERE EXISTS (SELECT 1 FROM oriented o
-                      WHERE o.a = w.w1 AND o.b = w.w2)),
-      tri_cnt AS (
-        SELECT x, CAST(count(*) AS BIGINT) AS tri_cnt
-        FROM (SELECT w0 AS x FROM tris UNION ALL
-              SELECT w1 AS x FROM tris UNION ALL
-              SELECT w2 AS x FROM tris) z
-        GROUP BY x)
-      SELECT d.x AS doc_id, d.deg,
-        CAST(coalesce(t.tri_cnt, 0) AS BIGINT) AS tri_cnt
-      FROM deg d LEFT JOIN tri_cnt t ON t.x = d.x""",
+    "sql_g5_triangles", operators.Graph.g5Sql(Dialect.Spark),
     operators.Graph.g5Triangles.oracle)
 
   /** Unrolled min-propagation rounds in [[nearDupLabelCtes]]; labels

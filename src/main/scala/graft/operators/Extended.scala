@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.Dialect
 import graft.Queries.Q
 import graft.Tables._
 
@@ -924,9 +925,12 @@ object Extended {
       liChecks.unionAll(fk).unionAll(oChecks).unionAll(evCheck)
         .withColumn("passed", col("n_violations") === 0)
     },
-    Some("""WITH li AS (
+    Some(x16Sql(Dialect.DuckDB)))
+
+  private[graft] def x16Sql(d: Dialect): String =
+    s"""WITH li AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-          CAST(count(DISTINCT (l_orderkey, l_linenumber)) AS BIGINT)
+          CAST(${d.countDistinct("l_orderkey", "l_linenumber")} AS BIGINT)
             AS nd,
           CAST(count(CASE WHEN l_quantity < 1 OR l_quantity > 50
             THEN 1 END) AS BIGINT) AS v_range
@@ -974,7 +978,7 @@ object Extended {
         SELECT 'no_future_ts', 'events.ts < 2030-01-01', n, v FROM evc)
       SELECT check_name, target, n_checked, n_violations,
         n_violations = 0 AS passed
-      FROM checks"""))
+      FROM checks"""
 
   // ---------------------------------------------------------------------
   // X17: incremental statistics maintenance — the lifecycle closure for
@@ -1130,20 +1134,20 @@ object Extended {
           col("p50_batch"), col("p90_batch"), col("p50_merged"),
           col("p90_merged"))
     },
-    Some {
-      import graft.functions.Portable.h60Duck
-      val hk = h60Duck("CAST(l_orderkey AS VARCHAR) || '|' || " +
-        "CAST(l_linenumber AS VARCHAR)", "x18|")
-      def samp(name: String, src: String) = s"""$name AS (
+    Some(x18Sql(Dialect.DuckDB)))
+
+  private[graft] def x18Sql(d: Dialect): String = {
+    val hk = d.h60(d.concatWs("|", "l_orderkey", "l_linenumber"), "x18|")
+    def samp(name: String, src: String) = s"""$name AS (
         SELECT flag, ok, ln, v, hk FROM (
           SELECT *, row_number() OVER (PARTITION BY flag
             ORDER BY hk ASC, v ASC, ok ASC, ln ASC) AS rs
           FROM $src) t
         WHERE rs <= $X18_K)"""
-      def quant(name: String, src: String, tag: String) = s"""$name AS (
+    def quant(name: String, src: String, tag: String) = s"""$name AS (
         SELECT flag,
-          max(CASE WHEN rv = (n + 1) // 2 THEN v END) AS p50_$tag,
-          max(CASE WHEN rv = (9 * n + 9) // 10 THEN v END) AS p90_$tag
+          max(CASE WHEN rv = (n + 1) ${d.div} 2 THEN v END) AS p50_$tag,
+          max(CASE WHEN rv = (9 * n + 9) ${d.div} 10 THEN v END) AS p90_$tag
         FROM (
           SELECT flag, v,
             row_number() OVER (PARTITION BY flag
@@ -1151,7 +1155,7 @@ object Extended {
             count(*) OVER (PARTITION BY flag) AS n
           FROM $src) t
         GROUP BY 1)"""
-      s"""WITH li AS (
+    s"""WITH li AS (
         SELECT l_returnflag AS flag, l_orderkey AS ok,
           l_linenumber AS ln, l_extendedprice AS v, $hk AS hk
         FROM lineitem),
@@ -1176,7 +1180,7 @@ object Extended {
         qm.p50_merged, qm.p90_merged
       FROM qs JOIN qb USING (flag) JOIN qm USING (flag)
       JOIN nr USING (flag)"""
-    })
+  }
 
   // ---------------------------------------------------------------------
   // X19: join-size estimation by count-min inner product (AMS F2 /

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Checkpoints
+import graft.{Checkpoints, Dialect}
 import graft.Checkpoints.SnapOps
 
 import org.apache.spark.HashPartitioner
@@ -241,16 +241,17 @@ object Graph {
         FROM nodes n LEFT JOIN recv$i v ON v.doc_id = n.doc_id
         CROSS JOIN dang$i d)"""
     }.mkString(",\n      ")
-    s"""$graphEdgesDuckCtes,
+    s"""${graphEdgesCtes(Dialect.DuckDB)},
       r0 AS (
         SELECT doc_id, n, outdeg, $PR_SCALE // n AS pr FROM nodes),
       $rounds"""
   }
 
   /** The synthetic node + edge CTEs alone (`nn`, `nodes`, `edges`) —
-    * the ONE oracle definition of [[nodesOf]]+[[edgesOf]], shared by
-    * the rank fixpoints and g8's walk generator. */
-  private[graft] def graphEdgesDuckCtes: String =
+    * the ONE SQL definition of [[nodesOf]]+[[edgesOf]], shared by the
+    * rank fixpoints, HITS, LPA, the k-core, triangles and g8's walk
+    * generator, and by their SQL twins. */
+  private[graft] def graphEdgesCtes(d: Dialect): String =
     s"""nn AS (SELECT count(*) AS n FROM documents),
       nodes AS (
         SELECT doc_id, nn.n, CAST(doc_id % 4 AS BIGINT) AS outdeg
@@ -259,7 +260,7 @@ object Graph {
         SELECT doc_id AS src, outdeg,
           (doc_id * (CASE WHEN k = 0 THEN 7 WHEN k = 1 THEN 13
             ELSE 29 END) + k + 1) % n AS dst
-        FROM nodes, unnest([0, 1, 2]) AS t(k)
+        FROM nodes${d.crossValues("t", "k", 0, 1, 2)}
         WHERE k < outdeg)"""
 
   val g1Pagerank = Q(
@@ -494,12 +495,15 @@ object Graph {
       hs.last.join(as.last, Seq("doc_id"))
         .select(col("doc_id"), col("hub"), col("auth"))
     },
-    Some(s"""WITH $hitsDuckCtes
-      SELECT h.doc_id, h.hub, a.auth
-      FROM h$HITS_ITERS h JOIN a$HITS_ITERS a ON a.doc_id = h.doc_id"""))
+    Some(g2Sql(Dialect.DuckDB)))
 
-  /** The full HITS recurrence (h0, a1..a6, h1..h6) as DuckDB CTE text —
-    * the shared oracle prefix of g2 (final scores) and g2b (per-round
+  private[graft] def g2Sql(d: Dialect): String =
+    s"""WITH ${hitsCtes(d)}
+      SELECT h.doc_id, h.hub, a.auth
+      FROM h$HITS_ITERS h JOIN a$HITS_ITERS a ON a.doc_id = h.doc_id"""
+
+  /** The full HITS recurrence (h0, a1..a6, h1..h6) as CTE text — the
+    * shared prefix of g2 and sql_g2 (final scores) and g2b (per-round
     * deltas). STRICTLY LINEAR chain (the sql_g1 lesson, here in the
     * oracle: DuckDB inlines CTEs, so a normalize step that references
     * its raw-score CTE twice — once for the join, once for the total —
@@ -510,7 +514,7 @@ object Graph {
     * (g2b's delta branches reference TWO chain suffixes each — that is
     * the g1b shape, quadratic total inlining over rounds, not the
     * exponential per-round doubling the linearity rule exists for.) */
-  private def hitsDuckCtes: String = {
+  private def hitsCtes(d: Dialect): String = {
     def norm(i: Int, frm: String, key: String, score: String,
         prev: String, prevCol: String): String =
       s"""${frm}r$i AS (
@@ -520,8 +524,8 @@ object Graph {
         GROUP BY e.$key),
       $frm$i AS (
         SELECT doc_id,
-          CAST(coalesce(s, 0) * $HITS_NN //
-            greatest(1, sum(coalesce(s, 0)) OVER () // $HITS_ND)
+          CAST(coalesce(s, 0) * $HITS_NN ${d.div}
+            greatest(1, sum(coalesce(s, 0)) OVER () ${d.div} $HITS_ND)
             AS BIGINT) AS $score
         FROM (SELECT n.doc_id, r.s
               FROM nodes n LEFT JOIN ${frm}r$i r
@@ -531,17 +535,8 @@ object Graph {
       norm(i, "a", "dst", "auth", hPrev, "hub") + ",\n      " +
         norm(i, "h", "src", "hub", s"a$i", "auth")
     }.mkString(",\n      ")
-    s"""nn AS (SELECT count(*) AS n FROM documents),
-      nodes AS (
-        SELECT doc_id, nn.n, CAST(doc_id % 4 AS BIGINT) AS outdeg
-        FROM documents CROSS JOIN nn),
-      edges AS (
-        SELECT doc_id AS src, outdeg,
-          (doc_id * (CASE WHEN k = 0 THEN 7 WHEN k = 1 THEN 13
-            ELSE 29 END) + k + 1) % n AS dst
-        FROM nodes, unnest([0, 1, 2]) AS t(k)
-        WHERE k < outdeg),
-      h0 AS (SELECT doc_id, $PR_SCALE // n AS hub FROM nodes),
+    s"""${graphEdgesCtes(d)},
+      h0 AS (SELECT doc_id, $PR_SCALE ${d.div} n AS hub FROM nodes),
       $rounds"""
   }
 
@@ -600,7 +595,7 @@ object Graph {
           CAST(sum(abs(a.auth - b.auth)) AS BIGINT) AS auth_l1
         FROM a$i a JOIN a${i - 1} b ON a.doc_id = b.doc_id"""
       }.mkString(" UNION ALL ")
-      s"""WITH $hitsDuckCtes
+      s"""WITH ${hitsCtes(Dialect.DuckDB)}
       SELECT h.round, h.hub_l1, a.auth_l1
       FROM ($hubB) h LEFT JOIN ($authB) a ON a.round = h.round"""
     })
@@ -672,9 +667,9 @@ object Graph {
     rounds.result()
   }
 
-  /** The LPA recurrence (nbrs, l0..l5) as DuckDB CTE text — the shared
-    * oracle prefix of g3 and g3b. */
-  private def lpaDuckCtes: String = {
+  /** The LPA recurrence (nbrs, l0..l5) as CTE text — the shared prefix
+    * of g3's and g3b's oracles and sql_g3. */
+  private def lpaCtes(d: Dialect): String = {
     val rounds = (1 to LPA_ITERS).map { i =>
       s"""c$i AS (
         SELECT b.node, l.lbl, CAST(count(*) AS BIGINT) AS cnt
@@ -687,16 +682,7 @@ object Graph {
           FROM c$i) z
         WHERE rn = 1)"""
     }.mkString(",\n      ")
-    s"""nn AS (SELECT count(*) AS n FROM documents),
-      nodes AS (
-        SELECT doc_id, nn.n, CAST(doc_id % 4 AS BIGINT) AS outdeg
-        FROM documents CROSS JOIN nn),
-      edges AS (
-        SELECT doc_id AS src, outdeg,
-          (doc_id * (CASE WHEN k = 0 THEN 7 WHEN k = 1 THEN 13
-            ELSE 29 END) + k + 1) % n AS dst
-        FROM nodes, unnest([0, 1, 2]) AS t(k)
-        WHERE k < outdeg),
+    s"""${graphEdgesCtes(d)},
       nbrs AS (
         SELECT src AS node, dst AS nbr FROM edges
         UNION ALL SELECT dst AS node, src AS nbr FROM edges
@@ -713,11 +699,14 @@ object Graph {
       labels.join(sizes, "lbl")
         .select(col("doc_id"), col("lbl").as("community"), col("csize"))
     },
-    Some(s"""WITH $lpaDuckCtes
+    Some(g3Sql(Dialect.DuckDB)))
+
+  private[graft] def g3Sql(d: Dialect): String =
+    s"""WITH ${lpaCtes(d)}
       SELECT l.doc_id, l.lbl AS community, s.csize
       FROM l$LPA_ITERS l
       JOIN (SELECT lbl, CAST(count(*) AS BIGINT) AS csize
-            FROM l$LPA_ITERS GROUP BY lbl) s ON s.lbl = l.lbl"""))
+            FROM l$LPA_ITERS GROUP BY lbl) s ON s.lbl = l.lbl"""
 
   // ---------------------------------------------------------------------
   // G3b: LPA convergence observability (VERDICT r15 #4) — one row per
@@ -756,7 +745,7 @@ object Graph {
           CAST(count(DISTINCT a.lbl) AS BIGINT) AS n_labels
         FROM l$i a JOIN l${i - 1} b ON a.doc_id = b.doc_id"""
       }.mkString(" UNION ALL ")
-      s"""WITH $lpaDuckCtes
+      s"""WITH ${lpaCtes(Dialect.DuckDB)}
       $branches"""
     })
 
@@ -806,44 +795,29 @@ object Graph {
       .distinct()
   }
 
-  /** [[denseUndOf]] as SQL text over the `nodes` CTE. `unnestJ` is the
-    * dialect seam: DuckDB `, unnest([..]) AS t(j)` vs Spark
-    * `LATERAL VIEW explode(array(..)) t AS j`. */
-  private[graft] def denseUndCte(h60: String, unnest123: String,
-      unnest012: String): String =
+  /** [[denseUndOf]] as SQL text over the `nodes` and `edges` CTEs. */
+  private[graft] def denseUndCte(d: Dialect): String =
     s"""und AS (
         SELECT DISTINCT least(x, y) AS u, greatest(x, y) AS v FROM (
           SELECT src AS x, dst AS y FROM edges
           UNION ALL
           SELECT doc_id AS x, ((doc_id - doc_id % 8) + j) % n AS y
-          FROM nodes $unnest123
+          FROM nodes ${d.crossValues("t", "j", 1, 2, 3)}
           WHERE doc_id % 8 < 4 AND j > doc_id % 8
           UNION ALL
           SELECT doc_id AS x, ((doc_id - doc_id % 8) + j) % n AS y
-          FROM nodes $unnest012
-          WHERE doc_id % 8 >= 4 AND j < $h60 % 4
+          FROM nodes ${d.crossValues("t", "j", 0, 1, 2)}
+          WHERE doc_id % 8 >= 4 AND j < ${d.h60("doc_id", "g4f")} % 4
         ) z WHERE x <> y)"""
 
-  /** DuckDB form of [[denseUndCte]] + the both-directions neighbor
-    * view, shared by g4's oracle (and reused by its SQL twin via the
-    * Spark-dialect variant). */
-  private[graft] def undNbrsCtesDuck: String =
-    denseUndCte(graft.functions.Portable.h60Duck("doc_id", "g4f"),
-      ", unnest([1, 2, 3]) AS t(j)", ", unnest([0, 1, 2]) AS t(j)") +
-      """,
-      unbrs AS (
-        SELECT u AS node, v AS nbr FROM und
-        UNION ALL SELECT v AS node, u AS nbr FROM und)"""
-
-  /** Spark-SQL form, for the sql twins. (r20 probe: a REPARTITION(nbr)
-    * hint here was tried and REVERTED — the executed plan already
-    * collapses the peeling rounds' identical agg exchanges via
+  /** [[denseUndCte]] + the both-directions neighbor view, shared by
+    * g4's and g4b's oracles and sql_g4. (r20 probe: a REPARTITION(nbr)
+    * hint on the Spark side was tried and REVERTED — the executed plan
+    * already collapses the peeling rounds' identical agg exchanges via
     * ReusedExchange (27 reuse nodes in plans/r20/sql_g4_kcore_before
     * .txt); the hint only added exchanges, measured ~1.1x slower.) */
-  private[graft] def undNbrsCtesSpark: String =
-    denseUndCte(graft.functions.Portable.h60Sql("doc_id", "g4f"),
-      " LATERAL VIEW explode(array(1L, 2L, 3L)) t AS j",
-      " LATERAL VIEW explode(array(0L, 1L, 2L)) t AS j") +
+  private[graft] def undNbrsCtes(d: Dialect): String =
+    denseUndCte(d) +
       """,
       unbrs AS (
         SELECT u AS node, v AS nbr FROM und
@@ -933,9 +907,9 @@ object Graph {
     (rounds.result(), aliveNbrCnt)
   }
 
-  /** The peeling recurrence (und, unbrs, a0..a6) as DuckDB CTE text —
-    * the shared oracle prefix of g4 and g4b. */
-  private def kcoreDuckCtes: String = {
+  /** The peeling recurrence (und, unbrs, a0..a6) as CTE text — the
+    * shared prefix of g4's and g4b's oracles and sql_g4. */
+  private def kcoreCtes(d: Dialect): String = {
     val rounds = (1 to KCORE_ITERS).map { i =>
       s"""d$i AS (
         SELECT b.node, CAST(count(*) AS BIGINT) AS deg
@@ -944,17 +918,8 @@ object Graph {
         GROUP BY b.node),
       a$i AS (SELECT node AS doc_id FROM d$i WHERE deg >= $KCORE_K)"""
     }.mkString(",\n      ")
-    s"""nn AS (SELECT count(*) AS n FROM documents),
-      nodes AS (
-        SELECT doc_id, nn.n, CAST(doc_id % 4 AS BIGINT) AS outdeg
-        FROM documents CROSS JOIN nn),
-      edges AS (
-        SELECT doc_id AS src, outdeg,
-          (doc_id * (CASE WHEN k = 0 THEN 7 WHEN k = 1 THEN 13
-            ELSE 29 END) + k + 1) % n AS dst
-        FROM nodes, unnest([0, 1, 2]) AS t(k)
-        WHERE k < outdeg),
-      $undNbrsCtesDuck,
+    s"""${graphEdgesCtes(d)},
+      ${undNbrsCtes(d)},
       a0 AS (SELECT doc_id FROM nodes),
       $rounds"""
   }
@@ -969,14 +934,17 @@ object Graph {
           "left_semi")
         .select(col("node").as("doc_id"), col("deg").as("core_deg"))
     },
-    Some(s"""WITH $kcoreDuckCtes
+    Some(g4Sql(Dialect.DuckDB)))
+
+  private[graft] def g4Sql(d: Dialect): String =
+    s"""WITH ${kcoreCtes(d)}
       SELECT d.node AS doc_id, d.deg AS core_deg
       FROM (SELECT b.node, CAST(count(*) AS BIGINT) AS deg
             FROM unbrs b
             JOIN a$KCORE_ITERS x ON x.doc_id = b.nbr
             GROUP BY b.node) d
       WHERE EXISTS (SELECT 1 FROM a$KCORE_ITERS y
-                    WHERE y.doc_id = d.node)"""))
+                    WHERE y.doc_id = d.node)"""
 
   // ---------------------------------------------------------------------
   // G4b: peeling convergence observability (VERDICT r15 #4) — one row
@@ -1008,7 +976,7 @@ object Graph {
           (SELECT CAST(count(*) AS BIGINT) FROM a${i - 1})
             - (SELECT CAST(count(*) AS BIGINT) FROM a$i) AS peeled"""
       }.mkString(" UNION ALL ")
-      s"""WITH $kcoreDuckCtes
+      s"""WITH ${kcoreCtes(Dialect.DuckDB)}
       $branches"""
     })
 
@@ -1067,18 +1035,11 @@ object Graph {
         .select(col("x").as("doc_id"), col("deg"),
           coalesce(col("tri_cnt"), lit(0L)).as("tri_cnt"))
     },
-    Some(s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-      nodes AS (
-        SELECT doc_id, nn.n, CAST(doc_id % 4 AS BIGINT) AS outdeg
-        FROM documents CROSS JOIN nn),
-      edges AS (
-        SELECT doc_id AS src, outdeg,
-          (doc_id * (CASE WHEN k = 0 THEN 7 WHEN k = 1 THEN 13
-            ELSE 29 END) + k + 1) % n AS dst
-        FROM nodes, unnest([0, 1, 2]) AS t(k)
-        WHERE k < outdeg),
-      ${denseUndCte(graft.functions.Portable.h60Duck("doc_id", "g4f"),
-        ", unnest([1, 2, 3]) AS t(j)", ", unnest([0, 1, 2]) AS t(j)")},
+    Some(g5Sql(Dialect.DuckDB)))
+
+  private[graft] def g5Sql(d: Dialect): String =
+    s"""WITH ${graphEdgesCtes(d)},
+      ${denseUndCte(d)},
       deg AS (
         SELECT x, CAST(count(*) AS BIGINT) AS deg
         FROM (SELECT u AS x FROM und UNION ALL SELECT v AS x FROM und) z
@@ -1109,7 +1070,7 @@ object Graph {
         GROUP BY x)
       SELECT d.x AS doc_id, d.deg,
         CAST(coalesce(t.tri_cnt, 0) AS BIGINT) AS tri_cnt
-      FROM deg d LEFT JOIN tri_cnt t ON t.x = d.x"""))
+      FROM deg d LEFT JOIN tri_cnt t ON t.x = d.x"""
 
   // ---------------------------------------------------------------------
   // G7: incremental (warm-start) PageRank on an edge delta — the
@@ -1268,7 +1229,8 @@ object Graph {
   // (its rows simply end — truncation is visible as a shorter walk,
   // never padded).
   //
-  // Shape at scale: the edge list builds once (the g1 cached frame);
+  // Shape at scale: the edge list builds once (persisted, eagerly
+  // counted);
   // each hop is one join keyed on the frontier's current node + a
   // per-(seed, walk) argmin over ≤ outdeg candidates (WindowGroupLimit
   // over ≤ 3-row groups), with the frontier localCheckpoint-truncated
@@ -1338,7 +1300,7 @@ object Graph {
     val emits = (0 to G8_LEN).map(i =>
       s"""SELECT seed, walk, CAST($i AS BIGINT) AS step, cur AS node
         FROM f$i""").mkString(" UNION ALL ")
-    s"""$graphEdgesDuckCtes,
+    s"""${graphEdgesCtes(Dialect.DuckDB)},
       f0 AS (
         SELECT doc_id AS seed, CAST(w AS BIGINT) AS walk,
           doc_id AS cur

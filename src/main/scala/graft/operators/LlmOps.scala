@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 
+import graft.Dialect
 import graft.Queries.Q
 import graft.Tables._
 import graft.functions.Portable
@@ -2148,9 +2149,12 @@ object LlmOps {
         .select(col("doc_id"), col("source"), col("n_tok"), col("stage"),
           Portable.h60(col("doc_id").cast("string"), "cur|").as("ord"))
     },
-    Some(s"""WITH tok AS (
+    Some(c10Sql(Dialect.DuckDB)))
+
+  private[graft] def c10Sql(d: Dialect): String =
+    s"""WITH tok AS (
         SELECT doc_id, source,
-          CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+          CAST(${d.len}(${d.split}(text, ' ')) AS BIGINT) AS n_tok
         FROM documents),
       hist AS (
         SELECT n_tok, CAST(sum(n_tok) AS BIGINT) AS mass
@@ -2160,11 +2164,11 @@ object LlmOps {
           least(CAST(${C10_STAGES - 1} AS BIGINT),
             CAST(coalesce(sum(mass) OVER (ORDER BY n_tok
                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              * $C10_STAGES // sum(mass) OVER () AS BIGINT)) AS stage
+              * $C10_STAGES ${d.div} sum(mass) OVER () AS BIGINT)) AS stage
         FROM hist)
-      SELECT t.doc_id, t.source, t.n_tok, s.stage,
-        ${Portable.h60Duck("CAST(doc_id AS VARCHAR)", "cur|")} AS ord
-      FROM tok t JOIN st s USING (n_tok)"""))
+      SELECT ${d.hint("BROADCAST(s)")}t.doc_id, t.source, t.n_tok, s.stage,
+        ${d.h60(s"CAST(doc_id AS ${d.varchar})", "cur|")} AS ord
+      FROM tok t JOIN st s USING (n_tok)"""
 
   // ---------------------------------------------------------------------
   // C11: link-rank × content-quality curation (VERDICT r15 #5) — what a
@@ -2706,17 +2710,23 @@ object LlmOps {
           countDistinct(col("raw_url")).as("n_raw"),
           min(col("doc_id")).as("keeper"))
     },
-    Some("""WITH raw AS (
+    Some(d14Sql(Dialect.DuckDB)))
+
+  private[graft] def d14Sql(d: Dialect): String = {
+    val query = s"""${d.arrayJoin}(${d.listSort}(${d.listFilter}(
+              ${d.split}(regexp_extract(raw_url, '[?]([^#]*)', 1), '&'),
+              p -> substr(p, 1, 4) != 'utm_')), '&')"""
+    s"""WITH raw AS (
         SELECT doc_id, concat(
           CASE WHEN doc_id % 4 = 0 THEN 'HTTPS://WWW.'
                WHEN doc_id % 4 = 1 THEN 'https://'
                WHEN doc_id % 4 = 2 THEN 'https://www.'
                ELSE 'HTTPS://' END,
-          'd', CAST(doc_id // 4 AS VARCHAR),
+          'd', CAST(doc_id ${d.div} 4 AS ${d.varchar}),
           CASE WHEN doc_id % 2 = 0 THEN '.Example.COM'
                ELSE '.example.com' END,
           CASE WHEN doc_id % 4 = 1 THEN ':443' ELSE '' END,
-          '/docs/', CAST(doc_id // 4 AS VARCHAR),
+          '/docs/', CAST(doc_id ${d.div} 4 AS ${d.varchar}),
           CASE WHEN doc_id % 4 = 2 THEN '/' ELSE '' END,
           CASE WHEN doc_id % 4 = 0 THEN '?utm_source=feed&b=2&a=1'
                WHEN doc_id % 4 = 1 THEN '?a=1&b=2'
@@ -2730,22 +2740,19 @@ object LlmOps {
           lower(regexp_extract(raw_url, '^([a-zA-Z]+)://', 1)), '://',
           regexp_replace(regexp_replace(
             lower(regexp_extract(raw_url, '^[a-zA-Z]+://([^/?#]+)', 1)),
-            '^www[.]', ''), ':443$', ''),
+            '^www[.]', ''), ':443$$', ''),
           regexp_replace(
             regexp_extract(raw_url, '^[a-zA-Z]+://[^/?#]+([^?#]*)', 1),
-            '/$', ''),
-          CASE WHEN array_to_string(list_sort(list_filter(
-              string_split(regexp_extract(raw_url, '[?]([^#]*)', 1), '&'),
-              p -> substr(p, 1, 4) != 'utm_')), '&') = '' THEN ''
-            ELSE concat('?', array_to_string(list_sort(list_filter(
-              string_split(regexp_extract(raw_url, '[?]([^#]*)', 1), '&'),
-              p -> substr(p, 1, 4) != 'utm_')), '&')) END)
+            '/$$', ''),
+          CASE WHEN $query = '' THEN ''
+            ELSE concat('?', $query) END)
           AS canon_url
         FROM raw)
       SELECT canon_url, CAST(count(*) AS BIGINT) AS n_variants,
         CAST(count(DISTINCT raw_url) AS BIGINT) AS n_raw,
         min(doc_id) AS keeper
-      FROM canon GROUP BY canon_url"""))
+      FROM canon GROUP BY canon_url"""
+  }
 
   // ---------------------------------------------------------------------
   // D15: cross-document LINE-level dedup (the CCNet/RefinedWeb pass):
@@ -3030,8 +3037,11 @@ object LlmOps {
         .filter(col("rk") <= 5)
         .select("query_id", "doc_id", "bm25", "n_terms", "rk")
     },
-    Some("""WITH toks AS (
-        SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+    Some(t18Sql(Dialect.DuckDB)))
+
+  private[graft] def t18Sql(d: Dialect): String =
+    s"""WITH toks AS (
+        SELECT doc_id, ${d.unnest}(${d.split}(lower(text), ' ')) AS tok
         FROM documents),
       tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
       dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
@@ -3042,7 +3052,7 @@ object LlmOps {
       qtop AS (SELECT tok, df FROM df WHERE length(tok) >= 5
         ORDER BY df DESC, tok ASC LIMIT 6),
       qterms AS (SELECT tok, df,
-          (row_number() OVER (ORDER BY df DESC, tok ASC) - 1) // 2
+          (row_number() OVER (ORDER BY df DESC, tok ASC) - 1) ${d.div} 2
             AS query_id
         FROM qtop),
       scored AS (
@@ -3064,7 +3074,7 @@ object LlmOps {
       SELECT query_id, doc_id, bm25, n_terms, CAST(rk AS BIGINT) AS rk
       FROM (SELECT *, row_number() OVER (PARTITION BY query_id
           ORDER BY bm25 DESC, doc_id ASC) AS rk FROM perdoc) z
-      WHERE rk <= 5"""))
+      WHERE rk <= 5"""
 
   // ---------------------------------------------------------------------
   // T19: DSIR importance weights (Xie et al. 2023, "Data Selection for

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Dialect
 import graft.Queries.Q
 import graft.Tables._
 
@@ -241,7 +242,10 @@ object Windows {
           round(col("sum_us").cast("double") / col("n_users") / 1e6, 6)
             .as("avg_secs_to_step"))
     },
-    Some("""WITH ev AS (
+    Some(w5Sql(Dialect.DuckDB)))
+
+  private[graft] def w5Sql(d: Dialect): String =
+    s"""WITH ev AS (
         SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
         FROM events),
       v AS (SELECT user_id, min(ts) AS t1 FROM ev
@@ -259,18 +263,18 @@ object Windows {
         FROM v
         UNION ALL
         SELECT 2, 'click', CAST(count(*) AS BIGINT),
-          CAST(sum(epoch_us(t2) - epoch_us(t1)) AS BIGINT)
+          CAST(sum(${d.epochUs("t2")} - ${d.epochUs("t1")}) AS BIGINT)
         FROM c
         UNION ALL
         SELECT 3, 'purchase', CAST(count(*) AS BIGINT),
-          CAST(sum(epoch_us(t3) - epoch_us(t2)) AS BIGINT)
+          CAST(sum(${d.epochUs("t3")} - ${d.epochUs("t2")}) AS BIGINT)
         FROM p)
       SELECT step, step_name, n_users,
         round(CAST(n_users AS DOUBLE) /
           lag(n_users) OVER (ORDER BY step), 6) AS conv_from_prev,
         round(CAST(sum_us AS DOUBLE) / n_users / 1e6, 6)
           AS avg_secs_to_step
-      FROM steps"""))
+      FROM steps"""
 
   // ---------------------------------------------------------------------
   // W6: cohort retention — the other analytics staple: users cohorted by
@@ -305,7 +309,11 @@ object Windows {
           round(col("n_active").cast("double") / col("n_cohort"), 6)
             .as("retention"))
     },
-    Some("""WITH days AS (
+    Some(w6Sql(Dialect.DuckDB)))
+
+  private[graft] def w6Sql(d: Dialect): String = {
+    val offset = d.daysBetween("d.day", "f.cohort_day")
+    s"""WITH days AS (
         SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE)
           AS day
         FROM events),
@@ -313,7 +321,7 @@ object Windows {
       cs AS (SELECT cohort_day, CAST(count(*) AS BIGINT) AS n_cohort
              FROM f GROUP BY 1)
       SELECT f.cohort_day,
-        CAST(d.day - f.cohort_day AS BIGINT) AS offset_days,
+        CAST($offset AS BIGINT) AS offset_days,
         CAST(count(*) AS BIGINT) AS n_active,
         any_value(cs.n_cohort) AS n_cohort,
         round(CAST(count(*) AS DOUBLE) / any_value(cs.n_cohort), 6)
@@ -321,7 +329,8 @@ object Windows {
       FROM days d
       JOIN f ON f.user_id = d.user_id
       JOIN cs ON cs.cohort_day = f.cohort_day
-      GROUP BY 1, 2"""))
+      GROUP BY 1, 2"""
+  }
 
   // ---------------------------------------------------------------------
   // W7: touch attribution — the third analytics staple after the funnel
@@ -373,25 +382,28 @@ object Windows {
       roll("last_touch", col("last_touch"))
         .unionAll(roll("first_touch", col("first_touch")))
     },
-    Some("""WITH ev AS (
+    Some(w7Sql(Dialect.DuckDB)))
+
+  private[graft] def w7Sql(d: Dialect): String = {
+    def touch(v: String) = s"""CASE WHEN event_type IN ('view', 'click')
+              THEN $v END"""
+    val lag = s"${d.epochUs("ts")} - ${d.epochUs("lt_ts")}"
+    s"""WITH ev AS (
         SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts,
           event_id, value
         FROM events),
       run AS (
         SELECT *,
-          last_value(CASE WHEN event_type IN ('view', 'click')
-              THEN event_type END IGNORE NULLS) OVER w AS lt,
-          last_value(CASE WHEN event_type IN ('view', 'click')
-              THEN ts END IGNORE NULLS) OVER w AS lt_ts,
-          first_value(CASE WHEN event_type IN ('view', 'click')
-              THEN event_type END IGNORE NULLS) OVER w AS ft
+          ${d.ignoreNulls("last_value", touch("event_type"))} OVER w AS lt,
+          ${d.ignoreNulls("last_value", touch("ts"))} OVER w AS lt_ts,
+          ${d.ignoreNulls("first_value", touch("event_type"))} OVER w AS ft
         FROM ev
         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
           ROWS UNBOUNDED PRECEDING)),
       att AS (
         SELECT value,
           CASE WHEN lt IS NOT NULL
-                 AND epoch_us(ts) - epoch_us(lt_ts) <= 604800000000
+                 AND $lag <= 604800000000
                THEN lt ELSE 'none' END AS last_touch,
           coalesce(ft, 'none') AS first_touch
         FROM run WHERE event_type = 'purchase')
@@ -403,7 +415,8 @@ object Windows {
       UNION ALL
       SELECT 'first_touch', first_touch, CAST(count(*) AS BIGINT),
         round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2)
-      FROM att GROUP BY 2"""))
+      FROM att GROUP BY 2"""
+  }
 
   // ---------------------------------------------------------------------
   // W8: rolling anomaly detection — the ops-monitor staple over the

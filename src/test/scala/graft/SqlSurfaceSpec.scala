@@ -213,4 +213,40 @@ class SqlSurfaceSpec extends SparkSuite {
     assert(dfOut.exceptAll(sqlOut).count() === 0)
     assert(dfOut.count() > 0)
   }
+
+  // twins rendered from their oracle's text through Dialect.Spark
+  // (twin, the DSL query it mirrors)
+  Seq(
+    SqlFrontend.sqlW5Funnel -> operators.Windows.w5Funnel,
+    SqlFrontend.sqlW6Cohort -> operators.Windows.w6Cohort,
+    SqlFrontend.sqlW7Attribution -> operators.Windows.w7Attribution,
+    SqlFrontend.sqlX16DataQuality -> operators.Extended.x16DataQuality,
+    SqlFrontend.sqlX18Quantiles ->
+      operators.Extended.x18IncrementalQuantiles,
+    SqlFrontend.sqlD14Url -> operators.LlmOps.d14UrlDedup,
+    SqlFrontend.sqlT18Bm25 -> operators.LlmOps.t18Bm25,
+    SqlFrontend.sqlC10Curriculum -> operators.LlmOps.c10Curriculum,
+    SqlFrontend.sqlG2Hits -> operators.Graph.g2Hits,
+    SqlFrontend.sqlG3LabelProp -> operators.Graph.g3LabelProp,
+    SqlFrontend.sqlG4Kcore -> operators.Graph.g4Kcore,
+    SqlFrontend.sqlG5Triangles -> operators.Graph.g5Triangles
+  ).foreach { case (twin, dsl) =>
+    test(s"${twin.name} (rendered from its oracle) returns ${dsl.name}'s " +
+        "rows") {
+      def rows(q: Queries.Q): Seq[String] = {
+        val df = q.fn(spark, sf)
+        df.select(df.columns.sorted.map(col): _*).collect().map(_.toSeq.map {
+          case v: Double => BigDecimal(v)
+            .setScale(9, BigDecimal.RoundingMode.HALF_UP).toString
+          case v => String.valueOf(v)
+        }.mkString("|")).sorted.toSeq
+      }
+      val got = rows(twin)
+      operators.LlmOps.releaseCaches()
+      val want = rows(dsl)
+      operators.LlmOps.releaseCaches()
+      assert(want.nonEmpty)
+      assert(got === want)
+    }
+  }
 }
